@@ -5,8 +5,9 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -14,6 +15,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 /** FITS BINTABLE DataSource V2 (SURVEY §2 a7, §4.3).
@@ -32,6 +34,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Conversion semantics (§1.2): big-endian decode, TSCAL/TZERO scaling,
   *    unsigned-idiom widening, TNULL→null, float NaN/Inf→null, trailing
   *    blank trim — i.e. the fits2db B-group applied at the source.
+  *  - Columnar where the records allow it: a plain or gzip BINTABLE scan
+  *    whose required columns are all scalar L/B/I/J/K/E/D or fixed `nA`
+  *    reads blocks of whole records and decodes each column into a column
+  *    vector (`FitsColumnarPartitionReader`); Spark's codegen consumes the
+  *    batches through `ColumnarToRow`. ASCII and tiled tables, P/Q heap
+  *    columns, `repeat > 1` arrays, X/C/M columns, the unsigned-idiom K
+  *    and micro-batch streams decode on rows (`FitsPartitionReader`).
+  *    `FitsScan` decides once per scan and its description (`explain()`)
+  *    says `columnar=true` or names what kept the scan on rows.
   *
   * Usage: `spark.read.format("fits").option("extnum", 0).load(path)`.
   */
@@ -283,16 +294,29 @@ class FitsScan(patterns: Seq[String], snapshot: Seq[String], extnum: Int,
     rowsPerSplitOpt: Option[Long] = None)
   extends Scan with Batch {
 
+  // set once this scan has been handed to a micro-batch stream, whose
+  // per-trigger partitions always read on rows
+  @volatile private var streamed = false
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    streamed = true
     new FitsMicroBatchStream(patterns, extnum, swo.spec.schema, required,
       rowsPerSplitOpt, checkpointLocation)
-  override def description(): String =
-    s"FitsScan(${patterns.mkString(",")}, cols=${required.fieldNames.mkString(",")})"
+  }
+  /** Names the read path, so `explain()` and plan dumps show it. */
+  override def description(): String = {
+    val path =
+      if (streamed) "columnar=false (micro-batch stream)"
+      else rowPathCause.fold("columnar=true")(why => s"columnar=false ($why)")
+    s"FitsScan(${patterns.mkString(",")}, cols=${required.fieldNames.mkString(",")}, $path)"
+  }
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  // planned once, so the read-path decision and the partitions Spark runs
+  // are the same set
+  private lazy val partitions: Array[InputPartition] = {
     // plan over the table's FROZEN snapshot — no re-listing per execution
     val splits = FitsScan.splitsFor(snapshot, extnum,
       swo.spec.schema, rowsPerSplitOpt)
@@ -304,8 +328,16 @@ class FitsScan(patterns: Seq[String], snapshot: Seq[String], extnum: Int,
     else splits
   }
 
+  /** None when every partition decodes columnar; otherwise the first
+    * column or file flavour that keeps the whole scan on rows.
+    */
+  private lazy val rowPathCause: Option[String] = FitsColumnar.rowPathCause(
+    required, partitions.toSeq.map(_.asInstanceOf[FitsInputPartition]))
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new FitsReaderFactory(required, FitsScan.confProps())
+    new FitsReaderFactory(required, FitsScan.confProps(), rowPathCause.isEmpty)
 }
 
 /** Micro-batch FITS stream — the nightly-drop ingest shape: files land in
@@ -418,12 +450,22 @@ class FitsMicroBatchStream(patterns: Seq[String], extnum: Int,
 final case class FitsInputPartition(path: String, swo: FitsSpecWithOffset,
     rowStart: Long, rowEnd: Long) extends InputPartition
 
-class FitsReaderFactory(required: StructType, confProps: Map[String, String])
+/** `columnar` is decided once per scan (`FitsScan.rowPathCause`), so every
+  * partition of one scan answers `supportColumnarReads` the same way —
+  * Spark rejects scans that mix row and columnar partitions.
+  */
+class FitsReaderFactory(required: StructType, confProps: Map[String, String],
+    columnar: Boolean = false)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[FitsInputPartition]
     new FitsPartitionReader(p.path, p.swo, required, p, confProps)
   }
+  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[ColumnarBatch] =
+    new FitsColumnarPartitionReader(required,
+      partition.asInstanceOf[FitsInputPartition], confProps)
 }
 
 class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
@@ -452,102 +494,8 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
   private val colIdx: Array[Int] =
     required.fieldNames.map(n => colNames.indexWhere(_ == n))
 
-  private val p = new Path(path)
-  private val fs = {
-    val c = new Configuration()
-    confProps.foreach { case (k, v) => c.set(k, v) }
-    p.getFileSystem(c)
-  }
-
-  /** Row bytes come sequentially; heap (P/Q) cells by positioned read. */
-  private trait ByteSrc {
-    def readFully(b: Array[Byte]): Unit
-    def readAt(pos: Long, b: Array[Byte], off: Int, len: Int): Unit
-    def close(): Unit
-  }
-
-  /** Plain file: seekable stream + a second lazily-opened handle for heap
-    * reads, so fixed-width-only scans pay nothing for it.
-    */
-  private final class FileSrc extends ByteSrc {
-    private val in = fs.open(p)
-    in.seek(swo.dataStart + part.rowStart * spec.rowBytes)
-    private var heapInOpt: Option[org.apache.hadoop.fs.FSDataInputStream] = None
-    def readFully(b: Array[Byte]): Unit = in.readFully(b)
-    def readAt(pos: Long, b: Array[Byte], off: Int, len: Int): Unit = {
-      val h = heapInOpt.getOrElse {
-        val x = fs.open(p); heapInOpt = Some(x); x
-      }
-      h.readFully(pos, b, off, len)
-    }
-    def close(): Unit = {
-      in.close()
-      heapInOpt.foreach(h => try h.close() catch { case _: Throwable => () })
-    }
-  }
-
-  /** Gzipped member: not seekable, so the whole member is decompressed
-    * once into memory and served from the array (positions are logical
-    * decompressed offsets, which is what the spec carries). Memory is
-    * bounded by the decompressed file size — acceptable because planning
-    * gives each .gz member exactly ONE partition; the splittable paths
-    * for big tables are the uncompressed layout and the TILED layout
-    * (ZTABLE=T, the fpack table shape — compressed cells inside an
-    * ordinary BINTABLE), which splits on tile boundaries: see
-    * TiledTableSpec and the tiled reader path above.
-    */
-  private final class GzipSrc extends ByteSrc {
-    // LAZY on both paths (r4 review): sequential row reads STREAM through
-    // the decompressor — a LIMIT 1 or fixed-width-only scan never holds
-    // the member in memory — and the whole-member byte array materializes
-    // only when a heap (P/Q descriptor or tile blob) readAt occurs, since
-    // gzip cannot seek backwards.
-    private var seqOpt: Option[java.io.DataInputStream] = None
-    private def seq: java.io.DataInputStream = seqOpt.getOrElse {
-      val d = new java.io.DataInputStream(
-        new java.util.zip.GZIPInputStream(fs.open(p)))
-      d.skipNBytes(swo.dataStart + part.rowStart * spec.rowBytes)
-      seqOpt = Some(d)
-      d
-    }
-    private var heapBytes: Array[Byte] = _
-    private def materialize(): Array[Byte] = {
-      val s = new java.util.zip.GZIPInputStream(fs.open(p))
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val b = new Array[Byte](1 << 16)
-        var total = 0L
-        var n = s.read(b)
-        while (n >= 0) {
-          if (n > 0) {
-            total += n
-            // JVM arrays cap near 2^31 bytes: fail with the remedy instead
-            // of an opaque OutOfMemoryError mid-scan
-            if (total > Int.MaxValue - 16)
-              throw new UnsupportedOperationException(
-                s"gzipped FITS member $path decompresses past ${Int.MaxValue - 16} " +
-                  "bytes (JVM array limit); store tables this large uncompressed " +
-                  "or tiled — both also restore splittable scans")
-            out.write(b, 0, n)
-          }
-          n = s.read(b)
-        }
-        out.toByteArray
-      } finally s.close()
-    }
-    def readFully(b: Array[Byte]): Unit = seq.readFully(b)
-    def readAt(at: Long, b: Array[Byte], off: Int, len: Int): Unit = {
-      if (heapBytes == null) heapBytes = materialize()
-      if (at + len > heapBytes.length)
-        throw new java.io.EOFException(s"gzip FITS heap read past end at $at")
-      System.arraycopy(heapBytes, at.toInt, b, off, len)
-    }
-    def close(): Unit =
-      seqOpt.foreach(d => try d.close() catch { case _: Throwable => () })
-  }
-
-  private val src: ByteSrc =
-    if (FitsTable.isGzip(path)) new GzipSrc else new FileSrc
+  private val src: FitsByteSrc = FitsByteSrc.open(path,
+    swo.dataStart + part.rowStart * spec.rowBytes, confProps)
   private lazy val heapStart = swo.dataStart +
     binSpec.map(_.theap).orElse(tiledSpec.map(_.theap)).get
 
@@ -560,7 +508,7 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
     case Some(ts) => nextTiled(ts)
     case None =>
       if (row >= part.rowEnd) return false
-      src.readFully(rowBuf)
+      src.readFully(rowBuf, 0, rowBuf.length)
       current = decode()
       row += 1
       true
@@ -584,13 +532,13 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
     val vals = new Array[Any](colIdx.length)
     var k = 0
     while (k < colIdx.length) { vals(k) = tileVals(k)(tileRowIdx); k += 1 }
-    current = InternalRow.fromSeq(vals.toIndexedSeq)
+    current = new GenericInternalRow(vals)
     tileRowIdx += 1
     true
   }
 
   private def loadTile(ts: FitsFormat.TiledTableSpec, tile: Long): Unit = {
-    src.readFully(rowBuf) // this tile's stored record: one 1PB per column
+    src.readFully(rowBuf, 0, rowBuf.length) // this tile's stored record: one 1PB per column
     val inTile = ts.rowsInTile(tile)
     tileRowCount = inTile
     tileRowIdx = 0
@@ -659,7 +607,7 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
       }
       k += 1
     }
-    InternalRow.fromSeq(values.toIndexedSeq)
+    new GenericInternalRow(values)
   }
 
   private def decodeBin(spec: FitsFormat.TableSpec): InternalRow = {
@@ -698,7 +646,7 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
       }
       k += 1
     }
-    InternalRow.fromSeq(values.toIndexedSeq)
+    new GenericInternalRow(values)
   }
 
   /** TDIM re-nesting: FITS cells are column-major flat (first axis varies
@@ -753,4 +701,106 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
 
   override def get(): InternalRow = current
   override def close(): Unit = src.close()
+}
+
+/** One partition's bytes: records arrive sequentially from `start` (an
+  * absolute position in the logical — for gzip, decompressed — stream);
+  * heap cells (P/Q descriptors, tile blobs) by positioned read.
+  */
+private[fits] trait FitsByteSrc {
+  def readFully(b: Array[Byte], off: Int, len: Int): Unit
+  def readAt(pos: Long, b: Array[Byte], off: Int, len: Int): Unit
+  def close(): Unit
+}
+
+private[fits] object FitsByteSrc {
+  def open(path: String, start: Long, confProps: Map[String, String]): FitsByteSrc = {
+    val p = new Path(path)
+    val fs = {
+      val c = new Configuration()
+      confProps.foreach { case (k, v) => c.set(k, v) }
+      p.getFileSystem(c)
+    }
+    if (FitsTable.isGzip(path)) new GzipSrc(fs, p, start) else new FileSrc(fs, p, start)
+  }
+
+  /** Plain file: seekable stream + a second lazily-opened handle for heap
+    * reads, so fixed-width-only scans pay nothing for it.
+    */
+  private final class FileSrc(fs: FileSystem, p: Path, start: Long) extends FitsByteSrc {
+    private val in = fs.open(p)
+    in.seek(start)
+    private var heapInOpt: Option[org.apache.hadoop.fs.FSDataInputStream] = None
+    def readFully(b: Array[Byte], off: Int, len: Int): Unit = in.readFully(b, off, len)
+    def readAt(pos: Long, b: Array[Byte], off: Int, len: Int): Unit = {
+      val h = heapInOpt.getOrElse {
+        val x = fs.open(p); heapInOpt = Some(x); x
+      }
+      h.readFully(pos, b, off, len)
+    }
+    def close(): Unit = {
+      in.close()
+      heapInOpt.foreach(h => try h.close() catch { case _: Throwable => () })
+    }
+  }
+
+  /** Gzipped member: not seekable, so the whole member is decompressed
+    * once into memory and served from the array (positions are logical
+    * decompressed offsets, which is what the spec carries). Memory is
+    * bounded by the decompressed file size — acceptable because planning
+    * gives each .gz member exactly ONE partition; the splittable paths
+    * for big tables are the uncompressed layout and the TILED layout
+    * (ZTABLE=T, the fpack table shape — compressed cells inside an
+    * ordinary BINTABLE), which splits on tile boundaries: see
+    * TiledTableSpec and FitsPartitionReader's tiled path.
+    */
+  private final class GzipSrc(fs: FileSystem, p: Path, start: Long) extends FitsByteSrc {
+    // LAZY on both paths (r4 review): sequential row reads STREAM through
+    // the decompressor — a LIMIT 1 or fixed-width-only scan never holds
+    // the member in memory — and the whole-member byte array materializes
+    // only when a heap (P/Q descriptor or tile blob) readAt occurs, since
+    // gzip cannot seek backwards.
+    private var seqOpt: Option[java.io.DataInputStream] = None
+    private def seq: java.io.DataInputStream = seqOpt.getOrElse {
+      val d = new java.io.DataInputStream(
+        new java.util.zip.GZIPInputStream(fs.open(p)))
+      d.skipNBytes(start)
+      seqOpt = Some(d)
+      d
+    }
+    private var heapBytes: Array[Byte] = _
+    private def materialize(): Array[Byte] = {
+      val s = new java.util.zip.GZIPInputStream(fs.open(p))
+      try {
+        val out = new java.io.ByteArrayOutputStream()
+        val b = new Array[Byte](1 << 16)
+        var total = 0L
+        var n = s.read(b)
+        while (n >= 0) {
+          if (n > 0) {
+            total += n
+            // JVM arrays cap near 2^31 bytes: fail with the remedy instead
+            // of an opaque OutOfMemoryError mid-scan
+            if (total > Int.MaxValue - 16)
+              throw new UnsupportedOperationException(
+                s"gzipped FITS member $p decompresses past ${Int.MaxValue - 16} " +
+                  "bytes (JVM array limit); store tables this large uncompressed " +
+                  "or tiled — both also restore splittable scans")
+            out.write(b, 0, n)
+          }
+          n = s.read(b)
+        }
+        out.toByteArray
+      } finally s.close()
+    }
+    def readFully(b: Array[Byte], off: Int, len: Int): Unit = seq.readFully(b, off, len)
+    def readAt(at: Long, b: Array[Byte], off: Int, len: Int): Unit = {
+      if (heapBytes == null) heapBytes = materialize()
+      if (at + len > heapBytes.length)
+        throw new java.io.EOFException(s"gzip FITS heap read past end at $at")
+      System.arraycopy(heapBytes, at.toInt, b, off, len)
+    }
+    def close(): Unit =
+      seqOpt.foreach(d => try d.close() catch { case _: Throwable => () })
+  }
 }

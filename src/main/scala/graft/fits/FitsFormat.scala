@@ -65,8 +65,10 @@ object FitsFormat {
       }
     }
 
-    /** Unsigned-integer idiom: TZERO=2^(bits-1), TSCAL absent/1 (§1.2). */
-    def isUnsignedIdiom: Boolean = zero.exists { z =>
+    /** Unsigned-integer idiom: TZERO=2^(bits-1), TSCAL absent/1 (§1.2).
+      * A val, as is `hasScaling`: the row decoders read both per cell.
+      */
+    val isUnsignedIdiom: Boolean = zero.exists { z =>
       scale.forall(_ == 1.0) && (
         (code == 'B' && z == -128.0) || // signed-byte idiom (rare, inverse)
         (code == 'I' && z == 32768.0) ||
@@ -74,9 +76,9 @@ object FitsFormat {
         (code == 'K' && z == 9.223372036854775808e18))
     }
 
-    def hasScaling: Boolean =
+    val hasScaling: Boolean =
       (scale.exists(_ != 1.0) || zero.exists(_ != 0.0)) && !isUnsignedIdiom &&
-        !Set('L', 'A', 'X', 'C', 'M').contains(code) // scaling undefined there
+        "LAXCM".indexOf(code) < 0 // scaling undefined there
 
     /** Spark type per the SURVEY §1.2 widening table. */
     def sparkElemType: DataType =
