@@ -207,6 +207,14 @@ object Util {
     }
   }
 
+  /** An sfDir as a scratch-name component (non-alphanumerics → '_'). */
+  def sfTag(sfDir: String): String = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
+
+  /** `fixtureOnce` keyed per scale-factor dir: `<tag>_<sfTag(sfDir)><suffix>`. */
+  def fixtureOnce(tag: String, sfDir: String, suffix: String = "")(
+      build: String => Unit): String =
+    fixtureOnce(s"${tag}_${sfTag(sfDir)}$suffix")(build)
+
   /** Streams `src` through gzip into `dst` (bounded buffer, no whole-file
     * materialization) — the one definition behind every .fits.gz fixture.
     */

@@ -34,11 +34,17 @@ object Verify {
     }
     val selected = only.fold(SparkEntry.queries)(ks =>
       SparkEntry.queries.filter { case (k, _) => ks(k) })
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    // a key's failure is printed and the run goes on (the exit status
+    // stays 0: the parity check reads every dump that did land); the summary
+    // line below names all of them at once
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -56,6 +62,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[verify] ${failed.length} failed: ${failed.mkString(",")}")
     spark.stop()
   }
 }

@@ -670,7 +670,7 @@ object PrepMain {
             // (ann_rpq_sweep_* / ann_rpq_op_*): the deployment serves
             // the residual chain, so its nprobe decision must be taken
             // on the residual curve, not the SQ8 rung's (r13 verdict #1)
-            sweepDir = Some(s"${opts.out}/ann_rpq_sweep.parquet")) ++
+            s"${opts.out}/ann_rpq_sweep.parquet") ++
           // the CONDITIONAL OPQ rung (r13 verdict #7): measured on this
           // corpus's variance profile — the manifest records the skew
           // and the decision either way; the rotated artifact +

@@ -399,7 +399,7 @@ object EtlOps {
   val b15_snapshot_read = OpQuery(
     (s, d) => {
       val base = graft.Util.scratch(
-        s"b15_table_${d.replaceAll("[^a-zA-Z0-9]", "_")}")
+        s"b15_table_${graft.Util.sfTag(d)}")
       val orders = t(s, d, "orders")
       orders.filter(col("o_orderkey") % 3 === 0)
         .select("o_orderkey", "o_totalprice")

@@ -949,15 +949,8 @@ object LlmOps {
         round(aggregate(err, lit(0.0), (a, x) => a + x), 6).as("recon_err"))
         .orderBy("vec_id")
     },
-    """WITH m AS (
-      |  SELECT vec_id, label, embedding,
-      |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-      |  FROM embeddings),
-      |q AS (
-      |  SELECT vec_id, label, embedding, maxabs,
-      |    list_transform(embedding,
-      |      x -> CAST(floor(x::DOUBLE * 127.0 / maxabs + 0.5) AS BIGINT)) AS qarr
-      |  FROM m WHERE maxabs > 0)
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
+      |${AnnIndex.sq8Sql("q", "vec_id, label, embedding, maxabs")}
       |SELECT vec_id, label,
       |  list_min(qarr) AS q_min, list_max(qarr) AS q_max,
       |  CAST(list_sum(qarr) AS BIGINT) AS q_sum,
@@ -994,15 +987,8 @@ object LlmOps {
         .orderBy(desc("sim"), asc("vec_id"))
         .limit(10)
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
-       |c AS (
-       |  SELECT vec_id, embedding, maxabs,
-       |    list_transform(embedding,
-       |      x -> CAST(floor(x::DOUBLE * 127.0 / maxabs + 0.5) AS BIGINT)) AS qarr
-       |  FROM m WHERE maxabs > 0),
+    s"""WITH ${AnnIndex.mSql("vec_id, embedding")},
+       |${AnnIndex.sq8Sql("c", "vec_id, embedding, maxabs")},
        |q AS (SELECT embedding AS qvec FROM c WHERE vec_id = 7),
        |a AS (
        |  SELECT c.vec_id, c.embedding, q.qvec,
@@ -1017,7 +1003,7 @@ object LlmOps {
     * stage — PrepMain's `--ann` writes the index, then runs THIS so the
     * manifest carries the recall the index actually serves): recall@10
     * of the pruned chain (nprobe cells over `codesDir`/`centDir`)
-    * against exact brute force over `emb`, on the `nQueries`
+    * against exact brute force over `emb`, on the `AnnIndex.CertQueries`
     * hash-smallest kept vectors (the i51 multiplier — a deterministic
     * sample, not a RNG, so re-runs certify identically). Returns
     * manifest counts; recall is RECORDED, not gated — there is no
@@ -1025,64 +1011,21 @@ object LlmOps {
     * very thing i66's curve exists to choose), so the consumer of the
     * manifest applies its own threshold.
     */
-  /** The deterministic hash-smallest query sample + its brute-force
-    * top-10 truth — shared by annCertify and annSweep (the truth is the
-    * expensive side; the sweep reuses ONE computation across rungs).
+  def annCertify(emb: DataFrame, codesDir: String,
+      centDir: String): Map[String, Long] = {
+    val qb = AnnIndex.sampled(emb, AnnIndex.CertQueries)
+    AnnIndex.certify("ann_", AnnIndex.truth(emb, qb),
+      sq8Top(emb, codesDir, centDir, qb, 2))
+  }
+
+  /** The SQ8 pruned chain over written artifacts: the batched cell-cut
+    * probe of `qb` at `nprobe`, exact top-10 re-rank against `emb`.
     */
-  private def annTruth(emb: DataFrame, nQueries: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    // the sample multiplier is DELIBERATELY different from lloydModel's
-    // seed multiplier (741103597): with the same ordering, the
-    // certification queries would BE the k-means seeds — interior
-    // points of their own Voronoi cells — and the shipped recall would
-    // systematically overstate what a typical query gets (r11 review
-    // finding; with auto-k ≥ 32 every certified query was a seed)
-    val qb = emb.withColumn("maxq", sqMaxAbs).filter(col("maxq") > 0)
-      .withColumn("skey", pmod(col("vec_id") * lit(2971215073L), lit(1000000007L)))
-      .orderBy("skey", "vec_id").limit(nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-      .localCheckpoint() // read by the cell rank, the probe AND the exact side
-    val exact = emb.crossJoin(broadcast(qb))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-        .orderBy(desc("sim"), asc("vec_id"))))
-      .filter(col("rk") <= 10)
-      .select("q_id", "vec_id")
-      .localCheckpoint()
-    (qb, exact)
-  }
-
-  /** (n_queries, n_exact, n_hit) of the nprobe-pruned chain over the
-    * written artifacts against a precomputed truth. */
-  private def annRecallCounts(emb: DataFrame, codesDir: String,
-      centDir: String, qb: DataFrame, exact: DataFrame,
-      nprobe: Int): (Long, Long, Long) = {
-    import org.apache.spark.sql.expressions.Window
-    val pruned = graft.ops.StreamOps
-      .ivfBatchStage1(emb.sparkSession, codesDir, qb, nprobe, Some(centDir))
-      .join(emb, "vec_id")
-      .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-        .orderBy(desc("sim"), asc("vec_id"))))
-      .filter(col("rk") <= 10)
-      .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-    val row = exact.join(pruned, Seq("q_id", "vec_id"), "left")
-      .agg(countDistinct(col("q_id")), count(lit(1)),
-        coalesce(sum(col("hit")), lit(0L))).head()
-    (row.getLong(0), row.getLong(1), row.getLong(2))
-  }
-
-  def annCertify(emb: DataFrame, codesDir: String, centDir: String,
-      nQueries: Int = 32, nprobe: Int = 2): Map[String, Long] = {
-    val (qb, exact) = annTruth(emb, nQueries)
-    val (nq, nExact, nHit) =
-      annRecallCounts(emb, codesDir, centDir, qb, exact, nprobe)
-    Map(
-      "ann_recall_n_queries" -> nq,
-      "ann_recall_hits" -> nHit,
-      "ann_recall_at10_micro" ->
-        (if (nExact == 0) 0L else math.floor(nHit * 1e6 / nExact).toLong))
+  private def sq8Top(emb: DataFrame, codesDir: String, centDir: String,
+      qb: DataFrame, nprobe: Int): DataFrame = {
+    val s = emb.sparkSession
+    AnnIndex.rerank(AnnIndex.sq8Probe(s.read.parquet(codesDir), qb,
+      Some(s.read.parquet(centDir)), nprobe), emb, AnnIndex.TopK)
   }
 
   /** The i66 operating CURVE as an index artifact (r10 verdict #2: the
@@ -1097,42 +1040,16 @@ object LlmOps {
     * reproducible triple.
     */
   def annSweep(emb: DataFrame, codesDir: String, centDir: String,
-      sweepDir: String, nQueries: Int = 32,
-      nprobes: Seq[Int] = Seq(1, 2, 4),
-      targetMicro: Long = 500000L): Map[String, Long] = {
+      sweepDir: String): Map[String, Long] = {
     // the np=2 rung IS the certified operating point, so the sweep
     // returns annCertify's ann_recall_* triple too — ONE brute-force
-    // truth pays for both manifest families (r11 review finding: the
-    // separate annCertify call recomputed the truth and the whole np=2
-    // chain for identical results; annCertify stays as the standalone
-    // recompute the spec's reproducibility identity uses)
-    require(nprobes.contains(2), "the sweep must include the np=2 operating point")
-    val (qb, exact) = annTruth(emb, nQueries)
-    val rows = nprobes.map { np =>
-      val (nq, nExact, nHit) =
-        annRecallCounts(emb, codesDir, centDir, qb, exact, np)
-      (np.toLong, nq, nExact, nHit,
-        if (nExact == 0) 0L else math.floor(nHit * 1e6 / nExact).toLong)
-    }
-    val s = emb.sparkSession
-    import s.implicits._
-    rows.toDF("np", "n_queries", "n_exact", "n_hit", "recall_micro")
-      .coalesce(1).write.mode("overwrite").parquet(sweepDir)
-    val op = rows.find(_._1 == 2L).get
-    // the OPERATING POINT (i80's inversion, shipped with the artifact):
-    // smallest rung meeting the target recall, or -1 = "re-cluster" —
-    // the consumer reads ann_op_nprobe instead of re-deriving the curve
-    val chosen = rows.filter(_._5 >= targetMicro).sortBy(_._1).headOption
-    rows.map { case (np, _, _, _, micro) =>
-      s"ann_sweep_np${np}_recall_micro" -> micro
-    }.toMap ++ Map(
-      "ann_recall_n_queries" -> op._2,
-      "ann_recall_hits" -> op._4,
-      "ann_recall_at10_micro" -> op._5,
-      "ann_op_target_micro" -> targetMicro,
-      "ann_op_nprobe" -> chosen.map(_._1).getOrElse(-1L),
-      "ann_op_recall_micro" -> chosen.map(_._5)
-        .getOrElse(rows.map(_._5).max))
+    // truth pays for both manifest families (annCertify stays as the
+    // standalone recompute the spec's reproducibility identity uses)
+    val qb = AnnIndex.sampled(emb, AnnIndex.CertQueries)
+    val exact = AnnIndex.truth(emb, qb).localCheckpoint()
+    AnnIndex.sweepManifest(emb.sparkSession, "ann_",
+      AnnIndex.curve(exact)(np =>
+        Seq("" -> sq8Top(emb, codesDir, centDir, qb, np))), sweepDir)
   }
 
   /** Build and persist the i61 SQ8 artifact for `d`'s embeddings table:
@@ -1147,8 +1064,7 @@ object LlmOps {
     * PlanAuditSpec, not just built.
     */
   def sq8WriteIndex(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"i63_sq8_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    graft.Util.fixtureOnce("i63_sq8", d) { dir =>
       t(s, d, "embeddings")
         .withColumn("maxabs", sqMaxAbs).filter(col("maxabs") > 0)
         .withColumn("qarr", sqCodes)
@@ -1188,6 +1104,18 @@ object LlmOps {
       .orderBy(desc("approx_sim"), asc("vec_id")).limit(50)
       .select("vec_id")
 
+  /** Stage 2 of the single-query probes of vector 7: the stage-1
+    * survivors `top` fetched from the float table by broadcast join and
+    * re-ranked exactly, top-10 (vec_id, label, sim).
+    */
+  private def rerank10(s: SparkSession, d: String, top: DataFrame,
+      qvec: Column): DataFrame =
+    t(s, d, "embeddings").join(broadcast(top), "vec_id")
+      .withColumn("sim", round(dot(col("embedding"), qvec), 6))
+      .select("vec_id", "label", "sim")
+      .orderBy(desc("sim"), asc("vec_id"))
+      .limit(10)
+
   /** i63: the i61 artifact, persisted and PROBED codes-only — closes the
     * honest gap the r8 verdict named (#1): i62 proves the two-stage
     * algorithm but quantizes inline, so its stage-1 scan still reads the
@@ -1225,8 +1153,7 @@ object LlmOps {
     * `sq8WriteIndex` — the gated ops are the queries.
     */
   def sq8WriteIndexIvf(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"i64_sq8ivf_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    graft.Util.fixtureOnce("i64_sq8ivf", d) { dir =>
       val e = t(s, d, "embeddings")
       // the artifact's partition column is `cell` (the family-wide
       // convention since r13 — `label` is reserved for embedding
@@ -1246,11 +1173,8 @@ object LlmOps {
           posexplode(col("embedding")).as(Seq("pos", "v")))
         .withColumn("v", col("v").cast(DoubleType))
         .groupBy("cell", "pos").agg(avg(col("v")).as("c"))
-        .write.mode("overwrite").parquet(sq8IvfCentDir(dir))
+        .write.mode("overwrite").parquet(AnnIndex.centDir(dir))
     }
-
-  /** The centroid table written beside an IVF index dir. */
-  def sq8IvfCentDir(idxDir: String): String = idxDir + "_cent"
 
   /** The k-means coarse-quantizer CTE block shared by the i67/i68/j22
     * oracles — ONE definition of the SQL mirror of
@@ -1312,7 +1236,7 @@ object LlmOps {
     * and a query's true neighbors concentrate in few cells). Identical
     * layout to the label index — codes partitioned by `label` (= the
     * learned cell id), k×64 centroid table at `<dir>_cent` — so every
-    * existing probe (`ivfCellRank`, `ivfBatchStage1`, j21's serving
+    * existing probe (`ivfCellRank`, `AnnIndex.sq8Probe`, j21's serving
     * plan) runs UNCHANGED against it; only the artifact's contents
     * differ. The centroid table is derived from the SAME maxabs-kept
     * frame as the codes and restricted to cells the final assignment
@@ -1323,9 +1247,8 @@ object LlmOps {
     * identical cells before returning.
     */
   def sq8WriteIndexKmeans(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"i67_sq8km_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
-      writeKmeansArtifacts(t(s, d, "embeddings"), dir, sq8IvfCentDir(dir))
+    graft.Util.fixtureOnce("i67_sq8km", d) { dir =>
+      writeKmeansArtifacts(t(s, d, "embeddings"), dir, AnnIndex.centDir(dir))
     }
 
   /** Cell ranking against the PERSISTED centroid artifact — stage 0 of
@@ -1338,7 +1261,7 @@ object LlmOps {
   def ivfCellRank(s: SparkSession, idxDir: String, qvec: Column): DataFrame = {
     val qex = s.range(1).select(posexplode(qvec).as(Seq("pos", "qv")))
       .withColumn("qv", col("qv").cast(DoubleType))
-    s.read.parquet(sq8IvfCentDir(idxDir))
+    s.read.parquet(AnnIndex.centDir(idxDir))
       .join(broadcast(qex), Seq("pos"))
       .groupBy("cell").agg(round(sum(col("c") * col("qv")), 6).as("csim"))
       .orderBy(desc("csim"), asc("cell")).limit(2)
@@ -1380,11 +1303,7 @@ object LlmOps {
       val top2 = ivfCellRank(s, idx, qvec)
         .collect().map(_.getInt(0)).toSeq
       val top = sq8CodesTop50(codes.filter(col("cell").isin(top2: _*)), qvec)
-      t(s, d, "embeddings").join(broadcast(top), "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), qvec), 6))
-        .select("vec_id", "label", "sim")
-        .orderBy(desc("sim"), asc("vec_id"))
-        .limit(10)
+      rerank10(s, d, top, qvec)
     },
     s"""WITH ex AS (SELECT vec_id, label, r.i AS pos, embedding[r.i]::DOUBLE AS v
        |            FROM embeddings, range(1,65) r(i)),
@@ -1429,83 +1348,26 @@ object LlmOps {
     */
   val i65_ann_recall = OpQuery(
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val idx = sq8WriteIndexIvf(s, d)
       val e = t(s, d, "embeddings")
-      val qb = e.filter(col("vec_id") % 101 === 3)
-        .withColumn("maxq", sqMaxAbs).filter(col("maxq") > 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-        .localCheckpoint() // read by the cell rank, the probe AND the exact side
-      val pruned = graft.ops.StreamOps.ivfBatchStage1(s, idx, qb)
-        .join(e, "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-          .orderBy(desc("sim"), asc("vec_id"))))
-        .filter(col("rk") <= 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-      val exact = e.crossJoin(broadcast(qb))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-          .orderBy(desc("sim"), asc("vec_id"))))
-        .filter(col("rk") <= 10)
-        .select("q_id", "vec_id")
-      exact.join(pruned, Seq("q_id", "vec_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-        .withColumn("recall", round(col("n_hit") / col("n_exact"), 6))
-        .orderBy("q_id")
+      val qb = keptPlanted(e) // read by the cell rank, the probe AND the exact side
+      AnnIndex.recall(AnnIndex.truth(e, qb),
+        Seq("" -> sq8Top(e, idx, AnnIndex.centDir(idx), qb, 2))).orderBy("q_id")
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
-       |c AS (
-       |  SELECT vec_id, label, embedding, maxabs,
-       |    list_transform(embedding,
-       |      x -> CAST(floor(x::DOUBLE * 127.0 / maxabs + 0.5) AS BIGINT)) AS qarr
-       |  FROM m WHERE maxabs > 0),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
+       |${AnnIndex.sq8Sql("c", "vec_id, label, embedding, maxabs")},
        |ex AS (SELECT label, r.i AS pos, embedding[r.i]::DOUBLE AS v
        |       FROM embeddings, range(1,65) r(i)),
        |cent AS (SELECT label, pos, avg(v) AS c FROM ex GROUP BY 1, 2),
        |q AS (SELECT vec_id AS q_id, embedding AS qvec FROM c
        |      WHERE vec_id % 101 = 3),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM q, range(1,65) r(i)),
-       |csim AS (SELECT q_id, cent.label, round(sum(c * qv), 6) AS s
-       |         FROM cent JOIN qx USING (pos) GROUP BY 1, 2),
-       |qc AS (SELECT q_id, label FROM (
-       |         SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csim) WHERE rk <= 2),
-       |a AS (
-       |  SELECT q.q_id, c.vec_id, c.embedding, q.qvec,
-       |    maxabs / 127.0 * list_sum(list_transform(range(1,65),
-       |      k -> c.qarr[k] * q.qvec[k]::DOUBLE)) AS approx_sim
-       |  FROM c JOIN qc ON c.label = qc.label
-       |         JOIN q ON q.q_id = qc.q_id
-       |  WHERE c.vec_id <> q.q_id),
-       |r AS (SELECT q_id, vec_id, embedding, qvec,
-       |    row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_sim DESC, vec_id) AS rk FROM a),
-       |s AS (SELECT q_id, vec_id,
-       |    round(${dotSql("embedding", "qvec")}, 6) AS sim
-       |  FROM r WHERE rk <= 50),
-       |p AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM s) WHERE rk <= 10),
-       |bf AS (SELECT q.q_id, e.vec_id,
-       |    round(${dotSql("e.embedding", "q.qvec")}, 6) AS sim
-       |  FROM embeddings e, q WHERE e.vec_id <> q.q_id),
-       |bfr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM bf) WHERE rk <= 10)
-       |SELECT bfr.q_id,
-       |  CAST(count(*) AS BIGINT) AS n_exact,
-       |  CAST(count(p.vec_id) AS BIGINT) AS n_hit,
-       |  round(count(p.vec_id) * 1.0 / count(*), 6) AS recall
-       |FROM bfr LEFT JOIN p ON bfr.q_id = p.q_id AND bfr.vec_id = p.vec_id
-       |GROUP BY bfr.q_id ORDER BY bfr.q_id""".stripMargin)
+       |${AnnIndex.qxSql("q")},
+       |${AnnIndex.csimSql("csim", "cent")},
+       |${AnnIndex.qcSql("qc", "csim", 2)},
+       |${AnnIndex.sq8ChainSql("a", "r", "s", "q", "qc", "label", np = false)},
+       |${AnnIndex.cutSql("p", "s", "sim", 10)},
+       |${AnnIndex.truthSql("q", 4)}
+       |${AnnIndex.recallSql("p" -> "")}""".stripMargin)
 
   /** i66: nprobe tuning sweep — the instrument that ACTS on i65's
     * finding: i65 certifies one operating point (nprobe = 2) and on
@@ -1513,7 +1375,7 @@ object LlmOps {
     * next question is "what nprobe do I need?", and THIS op answers it
     * with the recall-vs-nprobe curve (nprobe ∈ {1, 2, 4} of the k
     * cells), aggregated across the planted query set. Each rung runs
-    * the SAME pruned chain (ivfBatchStage1 parametrized by nprobe —
+    * the SAME pruned chain (AnnIndex.sq8Probe parametrized by nprobe —
     * j21/i65's plan, one partition-filter scan per rung) against the
     * ONE shared brute-force truth (computed once, the offline audit
     * pass). Note the curve is EMPIRICALLY monotone here but not
@@ -1532,55 +1394,40 @@ object LlmOps {
     * build persists, exactly the annCertTruthDir pattern).
     */
   private[graft] def labelSweepFrame(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val idx = sq8WriteIndexIvf(s, d)
     val e = t(s, d, "embeddings")
-    val qb = e.filter(col("vec_id") % 101 === 3)
-      .withColumn("maxq", sqMaxAbs).filter(col("maxq") > 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-      .localCheckpoint()
+    val qb = keptPlanted(e)
     // the brute-force truth, computed ONCE and shared by every rung
-    val exact = e.crossJoin(broadcast(qb))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-        .orderBy(desc("sim"), asc("vec_id"))))
-      .filter(col("rk") <= 10)
-      .select("q_id", "vec_id")
-      .localCheckpoint()
-    sweepRungs(s, e, qb, exact, idx)
+    sq8Curve(e, idx, qb, AnnIndex.truth(e, qb).localCheckpoint())
   }
 
-  /** The shared rung loop: per nprobe ∈ {1,2,4}, the pruned chain over
-    * `idx` scored against `exact`, aggregated to the curve frame
+  /** The shared rung loop: per nprobe rung, the pruned chain over `idx`
+    * scored against `exact`, aggregated to the curve frame
     * (np, n_queries, n_exact, n_hit, recall).
     */
-  private def sweepRungs(s: SparkSession, e: DataFrame, qb: DataFrame,
-      exact: DataFrame, idx: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    Seq(1, 2, 4).map { np =>
-      val pruned = graft.ops.StreamOps.ivfBatchStage1(s, idx, qb, np)
-        .join(e, "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-          .orderBy(desc("sim"), asc("vec_id"))))
-        .filter(col("rk") <= 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-      exact.join(pruned, Seq("q_id", "vec_id"), "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(lit(1)).as("n_exact"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-        .withColumn("np", lit(np.toLong))
-    }.reduce(_ unionByName _)
-      .withColumn("recall", round(col("n_hit") / col("n_exact"), 6))
-      .select("np", "n_queries", "n_exact", "n_hit", "recall")
-      .orderBy("np")
+  private def sq8Curve(e: DataFrame, idx: String, qb: DataFrame,
+      exact: DataFrame): DataFrame =
+    AnnIndex.curve(exact)(np =>
+      Seq("" -> sq8Top(e, idx, AnnIndex.centDir(idx), qb, np)))
+
+  /** The guarded planted queries (q_id, qvec), localCheckpointed: read
+    * by the cell rank, the probe AND the truth side.
+    */
+  private def keptPlanted(e: DataFrame): DataFrame =
+    AnnIndex.planted(AnnIndex.kept(e)).localCheckpoint()
+
+  /** The guarded planted queries and their PERSISTED brute-force truth
+    * (annCertTruthDir restricted to the kept queries).
+    */
+  private def keptCert(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val qb = keptPlanted(t(s, d, "embeddings"))
+    (qb, s.read.parquet(annCertTruthDir(s, d))
+      .join(broadcast(qb.select("q_id")), "q_id").localCheckpoint())
   }
 
   /** The LABEL-cell sweep frame, persisted once per (sf, corpus). */
   private[graft] def annSweepLabelDir(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"ann_sweep_label_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    graft.Util.fixtureOnce("ann_sweep_label", d) { dir =>
       labelSweepFrame(s, d).coalesce(1).write.mode("overwrite").parquet(dir)
     }
 
@@ -1592,80 +1439,33 @@ object LlmOps {
     * (r13 verdict #1).
     */
   private[graft] def kmSweepFrame(s: SparkSession, d: String): DataFrame = {
-    val idx = sq8WriteIndexKmeans(s, d)
-    val e = t(s, d, "embeddings")
-    val qb = e.filter(col("vec_id") % 101 === 3)
-      .withColumn("maxq", sqMaxAbs).filter(col("maxq") > 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-      .localCheckpoint()
-    val exact = s.read.parquet(annCertTruthDir(s, d))
-      .join(broadcast(qb.select("q_id")), "q_id")
-      .localCheckpoint()
-    sweepRungs(s, e, qb, exact, idx)
+    val (qb, exact) = keptCert(s, d)
+    sq8Curve(t(s, d, "embeddings"), sq8WriteIndexKmeans(s, d), qb, exact)
   }
 
   /** The LEARNED-cell sweep frame, persisted once per (sf, corpus). */
   private[graft] def annSweepKmDir(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"ann_sweep_km_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    graft.Util.fixtureOnce("ann_sweep_km", d) { dir =>
       kmSweepFrame(s, d).coalesce(1).write.mode("overwrite").parquet(dir)
     }
 
   val i66_ann_nprobe_sweep = OpQuery(
     (s, d) => labelSweepFrame(s, d),
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
-       |c AS (
-       |  SELECT vec_id, label, embedding, maxabs,
-       |    list_transform(embedding,
-       |      x -> CAST(floor(x::DOUBLE * 127.0 / maxabs + 0.5) AS BIGINT)) AS qarr
-       |  FROM m WHERE maxabs > 0),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
+       |${AnnIndex.sq8Sql("c", "vec_id, label, embedding, maxabs")},
        |ex AS (SELECT label, r.i AS pos, embedding[r.i]::DOUBLE AS v
        |       FROM embeddings, range(1,65) r(i)),
        |cent AS (SELECT label, pos, avg(v) AS c FROM ex GROUP BY 1, 2),
        |q AS (SELECT vec_id AS q_id, embedding AS qvec FROM c
        |      WHERE vec_id % 101 = 3),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM q, range(1,65) r(i)),
-       |csim AS (SELECT q_id, cent.label, round(sum(c * qv), 6) AS s
-       |         FROM cent JOIN qx USING (pos) GROUP BY 1, 2),
+       |${AnnIndex.qxSql("q")},
+       |${AnnIndex.csimSql("csim", "cent")},
        |nps AS (SELECT CAST(unnest([1, 2, 4]) AS BIGINT) AS np),
-       |qcr AS (SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |          ORDER BY s DESC, label) AS rk FROM csim),
-       |qc AS (SELECT np, q_id, label FROM qcr CROSS JOIN nps WHERE rk <= np),
-       |a AS (
-       |  SELECT qc.np, q.q_id, c.vec_id, c.embedding, q.qvec,
-       |    maxabs / 127.0 * list_sum(list_transform(range(1,65),
-       |      k -> c.qarr[k] * q.qvec[k]::DOUBLE)) AS approx_sim
-       |  FROM c JOIN qc ON c.label = qc.label
-       |         JOIN q ON q.q_id = qc.q_id
-       |  WHERE c.vec_id <> q.q_id),
-       |r AS (SELECT np, q_id, vec_id, embedding, qvec,
-       |    row_number() OVER (PARTITION BY np, q_id
-       |      ORDER BY approx_sim DESC, vec_id) AS rk FROM a),
-       |s2 AS (SELECT np, q_id, vec_id,
-       |    round(${dotSql("embedding", "qvec")}, 6) AS sim
-       |  FROM r WHERE rk <= 50),
-       |p AS (SELECT np, q_id, vec_id FROM (
-       |    SELECT np, q_id, vec_id, row_number() OVER (PARTITION BY np, q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM s2) WHERE rk <= 10),
-       |bf AS (SELECT q.q_id, e.vec_id,
-       |    round(${dotSql("e.embedding", "q.qvec")}, 6) AS sim
-       |  FROM embeddings e, q WHERE e.vec_id <> q.q_id),
-       |bfr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM bf) WHERE rk <= 10)
-       |SELECT nps.np,
-       |  CAST(count(DISTINCT bfr.q_id) AS BIGINT) AS n_queries,
-       |  CAST(count(*) AS BIGINT) AS n_exact,
-       |  CAST(count(p.vec_id) AS BIGINT) AS n_hit,
-       |  round(count(p.vec_id) * 1.0 / count(*), 6) AS recall
-       |FROM nps CROSS JOIN bfr
-       |LEFT JOIN p ON p.np = nps.np AND p.q_id = bfr.q_id
-       |           AND p.vec_id = bfr.vec_id
-       |GROUP BY nps.np ORDER BY nps.np""".stripMargin)
+       |${AnnIndex.qcRungsSql("qc", "csim")},
+       |${AnnIndex.sq8ChainSql("a", "r", "s2", "q", "qc", "label", np = true)},
+       |${AnnIndex.cutSql("p", "s2", "sim", 10, by = "np, q_id")},
+       |${AnnIndex.truthSql("q", 4)}
+       |${AnnIndex.curveSql("p" -> "")}""".stripMargin)
 
   /** i80: the ANN OPERATING-POINT SELECTOR — the r12 verdict's #3 (the
     * instruments exist — i65 certifies a point, i66 measures the curve
@@ -1726,21 +1526,7 @@ object LlmOps {
     s"""WITH curve AS (
        |${i66_ann_nprobe_sweep.oracle.get}
        |),
-       |mc AS (SELECT np, n_hit * 1000000 // n_exact AS micro FROM curve),
-       |tg AS (SELECT CAST(unnest([250000, 500000, 900000]) AS BIGINT)
-       |         AS target_micro),
-       |ch AS (SELECT tg.target_micro,
-       |         min(CASE WHEN mc.micro >= tg.target_micro
-       |             THEN mc.np END) AS chosen,
-       |         max(mc.micro) AS best
-       |       FROM tg CROSS JOIN mc GROUP BY 1)
-       |SELECT ch.target_micro,
-       |  coalesce(ch.chosen, -1) AS chosen_nprobe,
-       |  coalesce(mc.micro, ch.best) AS achieved_micro,
-       |  CASE WHEN ch.chosen IS NULL THEN 're-cluster' ELSE 'serve' END
-       |    AS decision
-       |FROM ch LEFT JOIN mc ON mc.np = ch.chosen
-       |ORDER BY target_micro""".stripMargin)
+       |${AnnIndex.invertSql}""".stripMargin)
 
   /** i83: the operating-point selector over the LEARNED-cell curve —
     * the r13 verdict's #1: i80 inverts i66's sweep, and i66 measures
@@ -1767,48 +1553,18 @@ object LlmOps {
   val i83_ann_operating_point_learned = OpQuery(
     (s, d) =>
       invertNprobeCurve(s, s.read.parquet(annSweepKmDir(s, d))),
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${lloydCteSql("maxabs > 0")},
-       |c AS (
-       |  SELECT m.vec_id, k.cid AS cell_km, m.embedding, m.maxabs,
-       |    list_transform(m.embedding,
-       |      x -> CAST(floor(x::DOUBLE * 127.0 / maxabs + 0.5) AS BIGINT)) AS qarr
-       |  FROM m JOIN cellkm k ON m.vec_id = k.vec_id WHERE m.maxabs > 0),
+       |${AnnIndex.kmSq8Sql("cell_km")},
        |qs AS (SELECT vec_id AS q_id, embedding AS qvec FROM c
        |       WHERE vec_id % 101 = 3),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
+       |${AnnIndex.qxSql("qs")},
        |nps AS (SELECT CAST(unnest([1, 2, 4]) AS BIGINT) AS np),
-       |csimk AS (SELECT q_id, centkm.label, round(sum(c * qv), 6) AS s
-       |          FROM centkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qckr AS (SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csimk),
-       |qck AS (SELECT np, q_id, label FROM qckr CROSS JOIN nps WHERE rk <= np),
-       |ak AS (
-       |  SELECT qck.np, qs.q_id, c.vec_id, c.embedding, qs.qvec,
-       |    maxabs / 127.0 * list_sum(list_transform(range(1,65),
-       |      k -> c.qarr[k] * qs.qvec[k]::DOUBLE)) AS approx_sim
-       |  FROM c JOIN qck ON c.cell_km = qck.label
-       |         JOIN qs ON qs.q_id = qck.q_id
-       |  WHERE c.vec_id <> qs.q_id),
-       |rk1 AS (SELECT np, q_id, vec_id, embedding, qvec,
-       |    row_number() OVER (PARTITION BY np, q_id
-       |      ORDER BY approx_sim DESC, vec_id) AS rk FROM ak),
-       |sk AS (SELECT np, q_id, vec_id,
-       |    round(${dotSql("embedding", "qvec")}, 6) AS sim
-       |  FROM rk1 WHERE rk <= 50),
-       |pk AS (SELECT np, q_id, vec_id FROM (
-       |    SELECT np, q_id, vec_id, row_number() OVER (PARTITION BY np, q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM sk) WHERE rk <= 10),
-       |bf AS (SELECT qs.q_id, e.vec_id,
-       |    round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |  FROM embeddings e, qs WHERE e.vec_id <> qs.q_id),
-       |bfr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM bf) WHERE rk <= 10),
+       |${AnnIndex.csimSql("csimk", "centkm")},
+       |${AnnIndex.qcRungsSql("qck", "csimk")},
+       |${AnnIndex.sq8ChainSql("ak", "rk1", "sk", "qs", "qck", "cell_km", np = true)},
+       |${AnnIndex.cutSql("pk", "sk", "sim", 10, by = "np, q_id")},
+       |${AnnIndex.truthSql("qs", 4)},
        |curve AS (SELECT nps.np,
        |    CAST(count(*) AS BIGINT) AS n_exact,
        |    CAST(count(pk.vec_id) AS BIGINT) AS n_hit
@@ -1816,31 +1572,16 @@ object LlmOps {
        |  LEFT JOIN pk ON pk.np = nps.np AND pk.q_id = bfr.q_id
        |             AND pk.vec_id = bfr.vec_id
        |  GROUP BY nps.np),
-       |mc AS (SELECT np, n_hit * 1000000 // n_exact AS micro FROM curve),
-       |tg AS (SELECT CAST(unnest([250000, 500000, 900000]) AS BIGINT)
-       |         AS target_micro),
-       |ch AS (SELECT tg.target_micro,
-       |         min(CASE WHEN mc.micro >= tg.target_micro
-       |             THEN mc.np END) AS chosen,
-       |         max(mc.micro) AS best
-       |       FROM tg CROSS JOIN mc GROUP BY 1)
-       |SELECT ch.target_micro,
-       |  coalesce(ch.chosen, -1) AS chosen_nprobe,
-       |  coalesce(mc.micro, ch.best) AS achieved_micro,
-       |  CASE WHEN ch.chosen IS NULL THEN 're-cluster' ELSE 'serve' END
-       |    AS decision
-       |FROM ch LEFT JOIN mc ON mc.np = ch.chosen
-       |ORDER BY target_micro""".stripMargin)
+       |${AnnIndex.invertSql}""".stripMargin)
 
   /** Build-once re-clustered SQ8 index (i82): the SAME build as
     * sq8WriteIndexKmeans with k = 20 — what a deployment runs when the
     * selector says "re-cluster".
     */
   def sq8WriteIndexKmeans20(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"i82_sq8km20_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    graft.Util.fixtureOnce("i82_sq8km20", d) { dir =>
       writeKmeansArtifacts(t(s, d, "embeddings"), dir,
-        sq8IvfCentDir(dir), k = 20)
+        AnnIndex.centDir(dir), k = 20)
     }
 
   /** i82: the RE-CLUSTER executor — acts on the selector's "re-cluster"
@@ -1856,7 +1597,7 @@ object LlmOps {
     * exactly what finer partitioning buys at equal scanned share: finer
     * cells waste less of the budget on far-away vectors that happened
     * to share a coarse cell. Both chains probe PERSISTED artifacts
-    * through the ONE serving plan (ivfBatchStage1), scored per query
+    * through the ONE serving plan (AnnIndex.sq8Probe), scored per query
     * against the SAME persisted brute-force truth (annCertTruthDir).
     * LlmOpsSpec pins the re-cluster payoff (total hits strictly rise on
     * the fixture) and the 20-cell artifact's cover identity. At 100 TB:
@@ -1868,44 +1609,16 @@ object LlmOps {
     */
   val i82_ann_recluster = OpQuery(
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val idx10 = sq8WriteIndexKmeans(s, d)
       val idx20 = sq8WriteIndexKmeans20(s, d)
       val e = t(s, d, "embeddings")
-      val qb = e.filter(col("vec_id") % 101 === 3)
-        .withColumn("maxq", sqMaxAbs).filter(col("maxq") > 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-        .localCheckpoint()
-      val exact = s.read.parquet(annCertTruthDir(s, d))
-        .join(broadcast(qb.select("q_id")), "q_id")
-        .localCheckpoint()
-      def prunedHits(idx: String, np: Int, hitCol: String): DataFrame =
-        graft.ops.StreamOps.ivfBatchStage1(s, idx, qb, np)
-          .join(e, "vec_id")
-          .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-          .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-            .orderBy(desc("sim"), asc("vec_id"))))
-          .filter(col("rk") <= 10)
-          .select(col("q_id"), col("vec_id"), lit(1L).as(hitCol))
-      exact
-        .join(prunedHits(idx10, 2, "k10_hit"), Seq("q_id", "vec_id"), "left")
-        .join(prunedHits(idx20, 4, "k20_hit"), Seq("q_id", "vec_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("k10_hit")), lit(0L)).as("n_hit_k10np2"),
-          coalesce(sum(col("k20_hit")), lit(0L)).as("n_hit_k20np4"))
-        .withColumn("recall_k10np2",
-          round(col("n_hit_k10np2") / col("n_exact"), 6))
-        .withColumn("recall_k20np4",
-          round(col("n_hit_k20np4") / col("n_exact"), 6))
-        .select("q_id", "n_exact", "n_hit_k10np2", "recall_k10np2",
-          "n_hit_k20np4", "recall_k20np4")
+      val (qb, exact) = keptCert(s, d)
+      AnnIndex.recall(exact, Seq(
+        "k10np2" -> sq8Top(e, idx10, AnnIndex.centDir(idx10), qb, 2),
+        "k20np4" -> sq8Top(e, idx20, AnnIndex.centDir(idx20), qb, 4)))
         .orderBy("q_id")
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${lloydCteSql("maxabs > 0")},
        |${lloydCteSqlK("g", "maxabs > 0", 20)},
        |c AS (
@@ -1918,71 +1631,22 @@ object LlmOps {
        |  WHERE m.maxabs > 0),
        |qs AS (SELECT vec_id AS q_id, embedding AS qvec FROM c
        |       WHERE vec_id % 101 = 3),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
-       |csimk AS (SELECT q_id, centkm.label, round(sum(c * qv), 6) AS s
-       |          FROM centkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qck AS (SELECT q_id, label FROM (
-       |          SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |            ORDER BY s DESC, label) AS rk FROM csimk) WHERE rk <= 2),
-       |csimg AS (SELECT q_id, gcentkm.label, round(sum(c * qv), 6) AS s
-       |          FROM gcentkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qcg AS (SELECT q_id, label FROM (
-       |          SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |            ORDER BY s DESC, label) AS rk FROM csimg) WHERE rk <= 4),
-       |ak AS (
-       |  SELECT qs.q_id, c.vec_id, c.embedding, qs.qvec,
-       |    maxabs / 127.0 * list_sum(list_transform(range(1,65),
-       |      k -> c.qarr[k] * qs.qvec[k]::DOUBLE)) AS approx_sim
-       |  FROM c JOIN qck ON c.cell_k10 = qck.label
-       |         JOIN qs ON qs.q_id = qck.q_id
-       |  WHERE c.vec_id <> qs.q_id),
-       |rk1 AS (SELECT q_id, vec_id, embedding, qvec,
-       |    row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_sim DESC, vec_id) AS rk FROM ak),
-       |sk AS (SELECT q_id, vec_id,
-       |    round(${dotSql("embedding", "qvec")}, 6) AS sim
-       |  FROM rk1 WHERE rk <= 50),
-       |pk AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM sk) WHERE rk <= 10),
-       |ag AS (
-       |  SELECT qs.q_id, c.vec_id, c.embedding, qs.qvec,
-       |    maxabs / 127.0 * list_sum(list_transform(range(1,65),
-       |      k -> c.qarr[k] * qs.qvec[k]::DOUBLE)) AS approx_sim
-       |  FROM c JOIN qcg ON c.cell_k20 = qcg.label
-       |         JOIN qs ON qs.q_id = qcg.q_id
-       |  WHERE c.vec_id <> qs.q_id),
-       |rg1 AS (SELECT q_id, vec_id, embedding, qvec,
-       |    row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_sim DESC, vec_id) AS rk FROM ag),
-       |sg AS (SELECT q_id, vec_id,
-       |    round(${dotSql("embedding", "qvec")}, 6) AS sim
-       |  FROM rg1 WHERE rk <= 50),
-       |pg AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM sg) WHERE rk <= 10),
-       |bf AS (SELECT qs.q_id, e.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM embeddings e, qs WHERE e.vec_id <> qs.q_id),
-       |bfr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM bf) WHERE rk <= 10)
-       |SELECT bfr.q_id,
-       |  CAST(count(*) AS BIGINT) AS n_exact,
-       |  CAST(count(pk.vec_id) AS BIGINT) AS n_hit_k10np2,
-       |  round(count(pk.vec_id) * 1.0 / count(*), 6) AS recall_k10np2,
-       |  CAST(count(pg.vec_id) AS BIGINT) AS n_hit_k20np4,
-       |  round(count(pg.vec_id) * 1.0 / count(*), 6) AS recall_k20np4
-       |FROM bfr
-       |LEFT JOIN pk ON bfr.q_id = pk.q_id AND bfr.vec_id = pk.vec_id
-       |LEFT JOIN pg ON bfr.q_id = pg.q_id AND bfr.vec_id = pg.vec_id
-       |GROUP BY bfr.q_id ORDER BY bfr.q_id""".stripMargin)
+       |${AnnIndex.qxSql("qs")},
+       |${AnnIndex.csimSql("csimk", "centkm")},
+       |${AnnIndex.qcSql("qck", "csimk", 2)},
+       |${AnnIndex.csimSql("csimg", "gcentkm")},
+       |${AnnIndex.qcSql("qcg", "csimg", 4)},
+       |${AnnIndex.sq8ChainSql("ak", "rk1", "sk", "qs", "qck", "cell_k10", np = false)},
+       |${AnnIndex.cutSql("pk", "sk", "sim", 10)},
+       |${AnnIndex.sq8ChainSql("ag", "rg1", "sg", "qs", "qcg", "cell_k20", np = false)},
+       |${AnnIndex.cutSql("pg", "sg", "sim", 10)},
+       |${AnnIndex.truthSql("qs", 9)}
+       |${AnnIndex.recallSql("pk" -> "_k10np2", "pg" -> "_k20np4")}""".stripMargin)
 
   /** i67: learned-cells IVF certification — the round-11 answer to the
     * r10 verdict's one `weak` ("the builder built the instrument that
     * measures the problem; make the instrument's number go up"): the
-    * SAME i65/i66 certification chain (ivfBatchStage1 per nprobe, one
+    * SAME i65/i66 certification chain (AnnIndex.sq8Probe per nprobe, one
     * shared brute-force truth) run against TWO persisted indexes — the
     * label-cell index (`sq8WriteIndexIvf`, the arbitrary coarse
     * quantizer) and the k-means index (`sq8WriteIndexKmeans`, i34's
@@ -2003,48 +1667,18 @@ object LlmOps {
     */
   val i67_ann_ivf_kmeans = OpQuery(
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val idxL = sq8WriteIndexIvf(s, d)
       val idxK = sq8WriteIndexKmeans(s, d)
       val e = t(s, d, "embeddings")
-      val qb = e.filter(col("vec_id") % 101 === 3)
-        .withColumn("maxq", sqMaxAbs).filter(col("maxq") > 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-        .localCheckpoint()
       // the brute-force truth: the PERSISTED once-per-corpus fixture
       // (annCertTruthDir, r11 verdict #7), restricted to the kept
       // queries — shared by all six pruned chains (3 nprobe × 2 idx)
-      val exact = s.read.parquet(annCertTruthDir(s, d))
-        .join(broadcast(qb.select("q_id")), "q_id")
-        .localCheckpoint()
-      def prunedHits(idx: String, np: Int, hitCol: String): DataFrame =
-        graft.ops.StreamOps.ivfBatchStage1(s, idx, qb, np)
-          .join(e, "vec_id")
-          .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-          .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-            .orderBy(desc("sim"), asc("vec_id"))))
-          .filter(col("rk") <= 10)
-          .select(col("q_id"), col("vec_id"), lit(1L).as(hitCol))
-      Seq(1, 2, 4).map { np =>
-        exact
-          .join(prunedHits(idxK, np, "km_hit"), Seq("q_id", "vec_id"), "left")
-          .join(prunedHits(idxL, np, "lab_hit"), Seq("q_id", "vec_id"), "left")
-          .agg(countDistinct(col("q_id")).as("n_queries"),
-            count(lit(1)).as("n_exact"),
-            coalesce(sum(col("km_hit")), lit(0L)).as("n_hit_kmeans"),
-            coalesce(sum(col("lab_hit")), lit(0L)).as("n_hit_label"))
-          .withColumn("np", lit(np.toLong))
-      }.reduce(_ unionByName _)
-        .withColumn("recall_kmeans", round(col("n_hit_kmeans") / col("n_exact"), 6))
-        .withColumn("recall_label", round(col("n_hit_label") / col("n_exact"), 6))
-        .select("np", "n_queries", "n_exact", "n_hit_kmeans",
-          "recall_kmeans", "n_hit_label", "recall_label")
-        .orderBy("np")
+      val (qb, exact) = keptCert(s, d)
+      AnnIndex.curve(exact)(np => Seq(
+        "kmeans" -> sq8Top(e, idxK, AnnIndex.centDir(idxK), qb, np),
+        "label" -> sq8Top(e, idxL, AnnIndex.centDir(idxL), qb, np)))
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${lloydCteSql("maxabs > 0")},
        |c AS (
        |  SELECT m.vec_id, m.label AS cell_lab, k.cid AS cell_km,
@@ -2057,70 +1691,18 @@ object LlmOps {
        |centl AS (SELECT label, pos, avg(v) AS c FROM exl GROUP BY 1, 2),
        |qs AS (SELECT vec_id AS q_id, embedding AS qvec FROM c
        |       WHERE vec_id % 101 = 3),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
+       |${AnnIndex.qxSql("qs")},
        |nps AS (SELECT CAST(unnest([1, 2, 4]) AS BIGINT) AS np),
-       |csimk AS (SELECT q_id, centkm.label, round(sum(c * qv), 6) AS s
-       |          FROM centkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qckr AS (SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csimk),
-       |qck AS (SELECT np, q_id, label FROM qckr CROSS JOIN nps WHERE rk <= np),
-       |csiml AS (SELECT q_id, centl.label, round(sum(c * qv), 6) AS s
-       |          FROM centl JOIN qx USING (pos) GROUP BY 1, 2),
-       |qclr AS (SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csiml),
-       |qcl AS (SELECT np, q_id, label FROM qclr CROSS JOIN nps WHERE rk <= np),
-       |ak AS (
-       |  SELECT qck.np, qs.q_id, c.vec_id, c.embedding, qs.qvec,
-       |    maxabs / 127.0 * list_sum(list_transform(range(1,65),
-       |      k -> c.qarr[k] * qs.qvec[k]::DOUBLE)) AS approx_sim
-       |  FROM c JOIN qck ON c.cell_km = qck.label
-       |         JOIN qs ON qs.q_id = qck.q_id
-       |  WHERE c.vec_id <> qs.q_id),
-       |rk1 AS (SELECT np, q_id, vec_id, embedding, qvec,
-       |    row_number() OVER (PARTITION BY np, q_id
-       |      ORDER BY approx_sim DESC, vec_id) AS rk FROM ak),
-       |sk AS (SELECT np, q_id, vec_id,
-       |    round(${dotSql("embedding", "qvec")}, 6) AS sim
-       |  FROM rk1 WHERE rk <= 50),
-       |pk AS (SELECT np, q_id, vec_id FROM (
-       |    SELECT np, q_id, vec_id, row_number() OVER (PARTITION BY np, q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM sk) WHERE rk <= 10),
-       |al AS (
-       |  SELECT qcl.np, qs.q_id, c.vec_id, c.embedding, qs.qvec,
-       |    maxabs / 127.0 * list_sum(list_transform(range(1,65),
-       |      k -> c.qarr[k] * qs.qvec[k]::DOUBLE)) AS approx_sim
-       |  FROM c JOIN qcl ON c.cell_lab = qcl.label
-       |         JOIN qs ON qs.q_id = qcl.q_id
-       |  WHERE c.vec_id <> qs.q_id),
-       |rl1 AS (SELECT np, q_id, vec_id, embedding, qvec,
-       |    row_number() OVER (PARTITION BY np, q_id
-       |      ORDER BY approx_sim DESC, vec_id) AS rk FROM al),
-       |sl AS (SELECT np, q_id, vec_id,
-       |    round(${dotSql("embedding", "qvec")}, 6) AS sim
-       |  FROM rl1 WHERE rk <= 50),
-       |pl AS (SELECT np, q_id, vec_id FROM (
-       |    SELECT np, q_id, vec_id, row_number() OVER (PARTITION BY np, q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM sl) WHERE rk <= 10),
-       |bf AS (SELECT qs.q_id, e.vec_id,
-       |    round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |  FROM embeddings e, qs WHERE e.vec_id <> qs.q_id),
-       |bfr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM bf) WHERE rk <= 10)
-       |SELECT nps.np,
-       |  CAST(count(DISTINCT bfr.q_id) AS BIGINT) AS n_queries,
-       |  CAST(count(*) AS BIGINT) AS n_exact,
-       |  CAST(count(pk.vec_id) AS BIGINT) AS n_hit_kmeans,
-       |  round(count(pk.vec_id) * 1.0 / count(*), 6) AS recall_kmeans,
-       |  CAST(count(pl.vec_id) AS BIGINT) AS n_hit_label,
-       |  round(count(pl.vec_id) * 1.0 / count(*), 6) AS recall_label
-       |FROM nps CROSS JOIN bfr
-       |LEFT JOIN pk ON pk.np = nps.np AND pk.q_id = bfr.q_id
-       |           AND pk.vec_id = bfr.vec_id
-       |LEFT JOIN pl ON pl.np = nps.np AND pl.q_id = bfr.q_id
-       |           AND pl.vec_id = bfr.vec_id
-       |GROUP BY nps.np ORDER BY nps.np""".stripMargin)
+       |${AnnIndex.csimSql("csimk", "centkm")},
+       |${AnnIndex.qcRungsSql("qck", "csimk")},
+       |${AnnIndex.csimSql("csiml", "centl")},
+       |${AnnIndex.qcRungsSql("qcl", "csiml")},
+       |${AnnIndex.sq8ChainSql("ak", "rk1", "sk", "qs", "qck", "cell_km", np = true)},
+       |${AnnIndex.cutSql("pk", "sk", "sim", 10, by = "np, q_id")},
+       |${AnnIndex.sq8ChainSql("al", "rl1", "sl", "qs", "qcl", "cell_lab", np = true)},
+       |${AnnIndex.cutSql("pl", "sl", "sim", 10, by = "np, q_id")},
+       |${AnnIndex.truthSql("qs", 4)}
+       |${AnnIndex.curveSql("pk" -> "_kmeans", "pl" -> "_label")}""".stripMargin)
 
   /** i68: incremental index REFRESH — the production path between full
     * rebuilds (i54 maintains the SQ8 flat index; this is the IVF
@@ -2145,13 +1727,12 @@ object LlmOps {
       val e = t(s, d, "embeddings")
       // build-once scaffolding: the index over the BASE corpus — the
       // gated op is the refresh against it, not the build
-      val idx = graft.Util.fixtureOnce(
-        s"i68_sq8km_base_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+      val idx = graft.Util.fixtureOnce("i68_sq8km_base", d) { dir =>
         writeKmeansArtifacts(e.filter(col("vec_id") % 7 =!= 5), dir,
-          sq8IvfCentDir(dir))
+          AnnIndex.centDir(dir))
       }
       // the persisted model back on the exact integer grid
-      val c1 = s.read.parquet(sq8IvfCentDir(idx))
+      val c1 = s.read.parquet(AnnIndex.centDir(idx))
         .withColumn("cv_i", round(col("c") * lit(1000.0)).cast("long"))
         .groupBy(col("cell").as("cid"))
         .agg(expr(
@@ -2159,8 +1740,7 @@ object LlmOps {
           .as("cv"))
       val newQ = e.filter(col("vec_id") % 7 === 5)
         .withColumn("maxabs", sqMaxAbs).filter(col("maxabs") > 0)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))").as("qv"))
+        .select(col("vec_id"), AnnIndex.grid("embedding").as("qv"))
       val assigned = graft.ops.CorpusOps.lloydAssign(newQ, c1)
       val baseCounts = s.read.parquet(idx)
         .groupBy("cell").agg(count(lit(1)).as("n_base"))
@@ -2172,10 +1752,7 @@ object LlmOps {
           col("n_new"), (col("n_base") + col("n_new")).as("n_total"))
         .orderBy("cell")
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, embedding")},
        |${lloydCteSql("maxabs > 0 AND vec_id % 7 <> 5")},
        |cellb AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_base
        |          FROM cellkm GROUP BY cid),
@@ -2213,9 +1790,6 @@ object LlmOps {
   private[graft] val PqM = 8
   private[graft] val PqK = 16
   private[graft] val PqDsub = 8
-
-  /** The codebook table written beside a PQ codes dir. */
-  def pqCbDir(idxDir: String): String = idxDir + "_cb"
 
   /** Per-(vec_id, sub) integer subvectors of a quantized frame
     * (vec_id, qv: array<bigint>[64]) — the unit PQ trains and encodes
@@ -2310,9 +1884,7 @@ object LlmOps {
 
   private[graft] def writePqArtifacts(emb: DataFrame, codesDir: String,
       cbDir: String, extraCols: Seq[String] = Nil): Unit = {
-    val q = emb.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))")
-        .as("qv"))
+    val q = emb.select(col("vec_id"), AnnIndex.grid("embedding").as("qv"))
     val (codes, m1) = pqTrainEncode(q, PqK)
     codes
       .join(emb.select("vec_id", extraCols: _*), "vec_id")
@@ -2322,9 +1894,8 @@ object LlmOps {
   }
 
   def pqWriteIndex(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"i69_pq_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
-      writePqArtifacts(t(s, d, "embeddings"), dir, pqCbDir(dir),
+    graft.Util.fixtureOnce("i69_pq", d) { dir =>
+      writePqArtifacts(t(s, d, "embeddings"), dir, AnnIndex.cbDir(dir),
         extraCols = Seq("label"))
     }
 
@@ -2337,34 +1908,16 @@ object LlmOps {
     * measured from the WRITTEN artifacts (the annWriteArtifact rule).
     */
   def pqWriteArtifact(emb: DataFrame, codesDir: String,
-      cbDir: String, nQueries: Int = 32): Map[String, Long] = {
-    import org.apache.spark.sql.expressions.Window
+      cbDir: String): Map[String, Long] = {
     writePqArtifacts(emb, codesDir, cbDir)
     val s = emb.sparkSession
     val codes = s.read.parquet(codesDir)
     val cb = s.read.parquet(cbDir)
-    val (qb0, exact) = annTruth(emb, nQueries)
-    val qb = qb0.withColumn("qq",
-      expr("transform(qvec, x -> CAST(floor(x * 1000) AS BIGINT))"))
-    val pruned = pqBatchTop(codes, cb, qb, 50)
-      .join(emb.select("vec_id", "embedding"), "vec_id")
-      .join(broadcast(qb0), "q_id")
-      .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-        .orderBy(desc("sim"), asc("vec_id"))))
-      .filter(col("rk") <= 10)
-      .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-    val row = exact.join(pruned, Seq("q_id", "vec_id"), "left")
-      .agg(countDistinct(col("q_id")), count(lit(1)),
-        coalesce(sum(col("hit")), lit(0L))).head()
-    val (nq, nExact, nHit) = (row.getLong(0), row.getLong(1), row.getLong(2))
-    Map(
-      "n_ann_pq_vectors" -> codes.count(),
-      "n_ann_pq_codebook_rows" -> cb.count(),
-      "ann_pq_recall_n_queries" -> nq,
-      "ann_pq_recall_hits" -> nHit,
-      "ann_pq_recall_at10_micro" ->
-        (if (nExact == 0) 0L else math.floor(nHit * 1e6 / nExact).toLong))
+    val qb = AnnIndex.sampled(emb, AnnIndex.CertQueries)
+    Map("n_ann_pq_vectors" -> codes.count(),
+      "n_ann_pq_codebook_rows" -> cb.count()) ++
+      AnnIndex.certify("ann_pq_", AnnIndex.truth(emb, qb),
+        AnnIndex.rerank(AnnIndex.adcProbe(codes, cb, qb), emb, AnnIndex.TopK))
   }
 
   /** PrepMain's `--ann` RESIDUAL rung (the production IVFADC artifact):
@@ -2379,17 +1932,13 @@ object LlmOps {
     * like-for-like (i76's receipt shipped as a pipeline number).
     */
   def pqrWriteArtifact(emb: DataFrame, annIdxDir: String, centDir: String,
-      codesDir: String, cbDir: String, nQueries: Int = 32,
-      sweepDir: Option[String] = None,
-      targetMicro: Long = 500000L): Map[String, Long] = {
-    import org.apache.spark.sql.expressions.Window
+      codesDir: String, cbDir: String, sweepDir: String): Map[String, Long] = {
     val s = emb.sparkSession
     writePqrArtifactsFrom(emb,
       s.read.parquet(annIdxDir).select(col("vec_id"), col("cell")),
       centDir, codesDir, cbDir)
-    val (qb0, exact) = annTruth(emb, nQueries)
-    val qb = qb0.withColumn("qq",
-      expr("transform(qvec, x -> CAST(floor(x * 1000) AS BIGINT))"))
+    val qb = AnnIndex.sampled(emb, AnnIndex.CertQueries)
+    val exact = AnnIndex.truth(emb, qb).localCheckpoint()
     // the residual chain's own SWEEP (r14, closing r13 verdict #1's
     // pipeline half): the index j24 actually serves must carry the
     // curve ITS deployment decision reads — np=2 doubles as the
@@ -2397,45 +1946,13 @@ object LlmOps {
     // ann_rpq_sweep_* AND the ann_rpq_op_* inversion
     // statics once for the whole sweep (r14 verdict #2): three nprobe
     // rungs share one centroid/codebook load instead of 3×(2+1) scans
-    val centDf = s.read.parquet(centDir).localCheckpoint()
-    val cbDf = s.read.parquet(cbDir).localCheckpoint()
-    val idxDf = s.read.parquet(codesDir)
-    val rows = Seq(1, 2, 4).map { np =>
-      val pruned = pqrBatchTop(s, codesDir, centDir, qb, 50, nprobe = np,
-          cbDirOpt = Some(cbDir), centDf = Some(centDf), cbDf = Some(cbDf),
-          idxDf = Some(idxDf))
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(broadcast(qb0), "q_id")
-        .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-          .orderBy(desc("sim"), asc("vec_id"))))
-        .filter(col("rk") <= 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-      val row = exact.join(pruned, Seq("q_id", "vec_id"), "left")
-        .agg(countDistinct(col("q_id")), count(lit(1)),
-          coalesce(sum(col("hit")), lit(0L))).head()
-      val (nq, nExact, nHit) = (row.getLong(0), row.getLong(1), row.getLong(2))
-      (np.toLong, nq, nExact, nHit,
-        if (nExact == 0) 0L else math.floor(nHit * 1e6 / nExact).toLong)
-    }
-    sweepDir.foreach { dir =>
-      import s.implicits._
-      rows.toDF("np", "n_queries", "n_exact", "n_hit", "recall_micro")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-    }
-    val op = rows.find(_._1 == 2L).get
-    val chosen = rows.filter(_._5 >= targetMicro).sortBy(_._1).headOption
-    rows.map { case (np, _, _, _, micro) =>
-      s"ann_rpq_sweep_np${np}_recall_micro" -> micro
-    }.toMap ++ Map(
-      "n_ann_rpq_vectors" -> s.read.parquet(codesDir).count(),
-      "ann_rpq_recall_n_queries" -> op._2,
-      "ann_rpq_recall_hits" -> op._4,
-      "ann_rpq_recall_at10_micro" -> op._5,
-      "ann_rpq_op_target_micro" -> targetMicro,
-      "ann_rpq_op_nprobe" -> chosen.map(_._1).getOrElse(-1L),
-      "ann_rpq_op_recall_micro" -> chosen.map(_._5)
-        .getOrElse(rows.map(_._5).max))
+    val cent = s.read.parquet(centDir).localCheckpoint()
+    val cb = s.read.parquet(cbDir).localCheckpoint()
+    val codes = s.read.parquet(codesDir)
+    AnnIndex.sweepManifest(s, "ann_rpq_", AnnIndex.curve(exact)(np => Seq("" ->
+      AnnIndex.rerank(AnnIndex.adcProbe(codes, cb, qb, Some(cent), np,
+        residual = true), emb, AnnIndex.TopK))), sweepDir) +
+      ("n_ann_rpq_vectors" -> codes.count())
   }
 
   /** The ADC (asymmetric distance computation) lookup table for one
@@ -2452,18 +1969,12 @@ object LlmOps {
   private[graft] def adcLitFrom(s: SparkSession, cbDir: String,
       qq: Array[Long], k: Int): Column = {
     val flat = new Array[Long](PqM * k)
-    s.read.parquet(cbDir)
-      .groupBy("sub", "cid")
-      .agg(sum(col("cv_i") *
-        element_at(typedLit(qq.toSeq), col("sub") * PqDsub + col("pos") + 1))
-        .as("ds"))
+    AnnIndex.adcTables(s.read.parquet(cbDir),
+        s.range(1).select(col("id").as("q_id")), typedLit(qq.toSeq))
       .collect() // bounded: m·k codebook rows
-      .foreach(r => flat(r.getInt(0) * k + r.getInt(1)) = r.getLong(2))
+      .foreach(r => flat(r.getInt(1) * k + r.getInt(2)) = r.getLong(3))
     typedLit(flat.toSeq)
   }
-
-  private[graft] def pqAdcLit(s: SparkSession, idxDir: String,
-      qq: Array[Long]): Column = adcLitFrom(s, pqCbDir(idxDir), qq, PqK)
 
   /** The quantized query vector (×1000 integer grid) for `vecId`,
     * collected driver-side — the PQ analog of sq8QueryVec: in production
@@ -2499,9 +2010,31 @@ object LlmOps {
       .orderBy(desc("approx_i"), asc("vec_id")).limit(n)
       .select("vec_id")
 
-  private[graft] def pqCodesTop(codes: DataFrame, adc: Column, n: Int,
-      excludeId: Long): DataFrame =
-    codesTopK(codes, adc, n, excludeId, PqK)
+  /** The i69 single-query flat-PQ probe oracle with a pluggable
+    * restriction of the candidate pool — shared by i73 (the pushed label
+    * filter, `el`) and i74 (mod-class tombstones). `extraCtes` precede the
+    * query CTEs, `extraJoin` follows the ap join, `pred` extends the ap
+    * WHERE clause (its text, line break included, is kept verbatim).
+    */
+  private def pqProbeSql(extraCtes: String = "", extraJoin: String = "",
+      pred: String = ""): String =
+    s"""WITH $pqCteSql,$extraCtes
+       |qq AS (SELECT list_transform(embedding,
+       |           x -> CAST(floor(x * 1000) AS BIGINT)) AS qv,
+       |         embedding AS qvec
+       |       FROM embeddings WHERE vec_id = 7),
+       |dt AS (SELECT pm1.sub, pm1.cid,
+       |         sum(qq.qv[pm1.sub * $PqDsub + pm1.pos] * pm1.cv_i) AS ds
+       |       FROM pm1, qq GROUP BY pm1.sub, pm1.cid),
+       |ap AS (SELECT cd.vec_id, sum(dt.ds) AS approx_i
+       |       FROM cd JOIN dt ON cd.sub = dt.sub AND cd.cid = dt.cid$extraJoin
+       |       WHERE cd.vec_id <> 7$pred GROUP BY cd.vec_id),
+       |r AS (SELECT vec_id FROM (
+       |    SELECT vec_id, row_number() OVER (ORDER BY approx_i DESC, vec_id) AS rk
+       |    FROM ap) WHERE rk <= 50)
+       |SELECT e.vec_id, e.label, round(${dotSql("e.embedding", "qq.qvec")}, 6) AS sim
+       |FROM embeddings e JOIN r USING (vec_id), qq
+       |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin
 
   /** i69: product-quantization ANN — the third compression rung of the
     * index family (i13 IVF partitions the scan, i62/i63 SQ8 shrinks it
@@ -2524,31 +2057,11 @@ object LlmOps {
     (s, d) => {
       val idx = pqWriteIndex(s, d)
       val codes = s.read.parquet(idx)
-      val adc = pqAdcLit(s, idx, pqQueryGrid(s, d, 7L))
-      val top = pqCodesTop(codes, adc, 50, 7L)
-      t(s, d, "embeddings").join(broadcast(top), "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), sq8QueryVec(s, d, 7L)), 6))
-        .select("vec_id", "label", "sim")
-        .orderBy(desc("sim"), asc("vec_id"))
-        .limit(10)
+      val adc = adcLitFrom(s, AnnIndex.cbDir(idx), pqQueryGrid(s, d, 7L), PqK)
+      val top = codesTopK(codes, adc, 50, 7L, PqK)
+      rerank10(s, d, top, sq8QueryVec(s, d, 7L))
     },
-    s"""WITH $pqCteSql,
-       |qq AS (SELECT list_transform(embedding,
-       |           x -> CAST(floor(x * 1000) AS BIGINT)) AS qv,
-       |         embedding AS qvec
-       |       FROM embeddings WHERE vec_id = 7),
-       |dt AS (SELECT pm1.sub, pm1.cid,
-       |         sum(qq.qv[pm1.sub * $PqDsub + pm1.pos] * pm1.cv_i) AS ds
-       |       FROM pm1, qq GROUP BY pm1.sub, pm1.cid),
-       |ap AS (SELECT cd.vec_id, sum(dt.ds) AS approx_i
-       |       FROM cd JOIN dt ON cd.sub = dt.sub AND cd.cid = dt.cid
-       |       WHERE cd.vec_id <> 7 GROUP BY cd.vec_id),
-       |r AS (SELECT vec_id FROM (
-       |    SELECT vec_id, row_number() OVER (ORDER BY approx_i DESC, vec_id) AS rk
-       |    FROM ap) WHERE rk <= 50)
-       |SELECT e.vec_id, e.label, round(${dotSql("e.embedding", "qq.qvec")}, 6) AS sim
-       |FROM embeddings e JOIN r USING (vec_id), qq
-       |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin)
+    pqProbeSql())
 
   /** The PQ train+encode CTE block shared by the i69/i70/i71 oracles —
     * the SQL mirror of `pqWriteIndex` (one definition, the lloydCteSql
@@ -2597,36 +2110,6 @@ object LlmOps {
        |             FROM psv JOIN pc1 ON psv.sub = pc1.sub)),
        |cd AS (SELECT vec_id, sub, cid FROM pa2 WHERE rn = 1)""".stripMargin
 
-  /** The batched PQ ADC probe shared by i70 (and any multi-query
-    * consumer): for a query frame (q_id, qq: array<bigint>), build the
-    * per-query integer ADC tables (Q × m·k rows — the query batch
-    * against the CONSTANT-SIZE codebook, broadcastable at any corpus
-    * size) and rank the codes scan per query. The only N-sized work is
-    * the codes scan itself (8 exploded rows per vector joined map-side
-    * against the broadcast tables) and the per-(q_id, vec_id) partial
-    * sum — no float column, no corpus self-join. Returns the approx
-    * top-`n` (q_id, vec_id) survivors.
-    */
-  private[graft] def pqBatchTop(codes: DataFrame, cb: DataFrame,
-      qb: DataFrame, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qx = qb.select(col("q_id"), posexplode(col("qq")).as(Seq("p0", "qv")))
-      .withColumn("sub", expr(s"p0 DIV $PqDsub"))
-      .withColumn("pos", expr(s"p0 % $PqDsub"))
-    val dtq = cb.join(broadcast(qx), Seq("sub", "pos"))
-      .groupBy("q_id", "sub", "cid")
-      .agg(sum(col("cv_i") * col("qv")).as("ds"))
-    codes.select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "cid")))
-      .join(broadcast(dtq), Seq("sub", "cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id")
-      .agg(sum("ds").as("approx_i"))
-      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-        .orderBy(desc("approx_i"), asc("vec_id"))))
-      .filter(col("rk") <= n)
-      .select("q_id", "vec_id")
-  }
-
   /** i70: recall@10 certification of the PQ index — the i65 instrument
     * pointed at the ~20× compression rung: for the planted query set
     * (vec_id ≡ 3 mod 101, the shared convention), the PQ probe
@@ -2643,65 +2126,25 @@ object LlmOps {
     */
   val i70_ann_pq_recall = OpQuery(
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val idx = pqWriteIndex(s, d)
       val e = t(s, d, "embeddings")
-      val qb = e.filter(col("vec_id") % 101 === 3)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
-          expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))")
-            .as("qq"))
+      val qb = AnnIndex.planted(e)
         .localCheckpoint() // feeds the ADC build, the re-rank AND the truth
-      val pruned = pqBatchTop(s.read.parquet(idx),
-          s.read.parquet(pqCbDir(idx)), qb, 50)
-        .join(e, "vec_id")
-        .join(broadcast(qb.select("q_id", "qvec")), "q_id")
-        .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-          .orderBy(desc("sim"), asc("vec_id"))))
-        .filter(col("rk") <= 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
       // truth = the PERSISTED once-per-corpus brute-force fixture
       // (annCertTruthDir) — the gate times the chain under test, not
       // the offline audit input (r11 verdict #7)
-      val exact = s.read.parquet(annCertTruthDir(s, d))
-      exact.join(pruned, Seq("q_id", "vec_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-        .withColumn("recall", round(col("n_hit") / col("n_exact"), 6))
-        .orderBy("q_id")
+      AnnIndex.recall(s.read.parquet(annCertTruthDir(s, d)),
+        Seq("" -> pqTop(e, idx, qb))).orderBy("q_id")
     },
     s"""WITH $pqCteSql,
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM embeddings WHERE vec_id % 101 = 3),
-       |dtq AS (SELECT qs.q_id, pm1.sub, pm1.cid,
-       |          sum(qs.qq[pm1.sub * $PqDsub + pm1.pos] * pm1.cv_i) AS ds
-       |        FROM pm1, qs GROUP BY 1, 2, 3),
+       |${AnnIndex.qsSql("embeddings WHERE vec_id % 101 = 3")},
+       |${AnnIndex.dtqSql("dtq", "pm1", "qs", "qq")},
        |ap AS (SELECT dtq.q_id, cd.vec_id, sum(dtq.ds) AS approx_i
        |       FROM cd JOIN dtq ON cd.sub = dtq.sub AND cd.cid = dtq.cid
        |       WHERE cd.vec_id <> dtq.q_id GROUP BY 1, 2),
-       |pr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_i DESC, vec_id) AS rk FROM ap) WHERE rk <= 50),
-       |rr AS (SELECT pr.q_id, pr.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM pr JOIN embeddings e USING (vec_id) JOIN qs USING (q_id)),
-       |p AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM rr) WHERE rk <= 10),
-       |bf AS (SELECT qs.q_id, e.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM embeddings e, qs WHERE e.vec_id <> qs.q_id),
-       |bfr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM bf) WHERE rk <= 10)
-       |SELECT bfr.q_id,
-       |  CAST(count(*) AS BIGINT) AS n_exact,
-       |  CAST(count(p.vec_id) AS BIGINT) AS n_hit,
-       |  round(count(p.vec_id) * 1.0 / count(*), 6) AS recall
-       |FROM bfr LEFT JOIN p ON bfr.q_id = p.q_id AND bfr.vec_id = p.vec_id
-       |GROUP BY bfr.q_id ORDER BY bfr.q_id""".stripMargin)
+       |${AnnIndex.rerankSql("pr", "rr", "p", "ap")},
+       |${AnnIndex.truthSql("qs", 9)}
+       |${AnnIndex.recallSql("p" -> "")}""".stripMargin)
 
   /** i73: FILTERED ANN — the hybrid-search shape every RAG deployment
     * hits (a metadata predicate composed with a vector query: "top-10
@@ -2723,36 +2166,16 @@ object LlmOps {
   val i73_sim_ann_filtered = OpQuery(
     (s, d) => {
       val idx = pqWriteIndex(s, d)
-      val adc = pqAdcLit(s, idx, pqQueryGrid(s, d, 7L))
+      val adc = adcLitFrom(s, AnnIndex.cbDir(idx), pqQueryGrid(s, d, 7L), PqK)
       // the predicate pushes into the codes scan; the ADC cut ranks
       // the FILTERED pool
-      val top = pqCodesTop(
-        s.read.parquet(idx).filter(col("label") < 5), adc, 50, 7L)
-      t(s, d, "embeddings").join(broadcast(top), "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), sq8QueryVec(s, d, 7L)), 6))
-        .select("vec_id", "label", "sim")
-        .orderBy(desc("sim"), asc("vec_id"))
-        .limit(10)
+      val top = codesTopK(
+        s.read.parquet(idx).filter(col("label") < 5), adc, 50, 7L, PqK)
+      rerank10(s, d, top, sq8QueryVec(s, d, 7L))
     },
-    s"""WITH $pqCteSql,
-       |el AS (SELECT vec_id, label FROM embeddings WHERE label < 5),
-       |qq AS (SELECT list_transform(embedding,
-       |           x -> CAST(floor(x * 1000) AS BIGINT)) AS qv,
-       |         embedding AS qvec
-       |       FROM embeddings WHERE vec_id = 7),
-       |dt AS (SELECT pm1.sub, pm1.cid,
-       |         sum(qq.qv[pm1.sub * $PqDsub + pm1.pos] * pm1.cv_i) AS ds
-       |       FROM pm1, qq GROUP BY pm1.sub, pm1.cid),
-       |ap AS (SELECT cd.vec_id, sum(dt.ds) AS approx_i
-       |       FROM cd JOIN dt ON cd.sub = dt.sub AND cd.cid = dt.cid
-       |            JOIN el ON el.vec_id = cd.vec_id
-       |       WHERE cd.vec_id <> 7 GROUP BY cd.vec_id),
-       |r AS (SELECT vec_id FROM (
-       |    SELECT vec_id, row_number() OVER (ORDER BY approx_i DESC, vec_id) AS rk
-       |    FROM ap) WHERE rk <= 50)
-       |SELECT e.vec_id, e.label, round(${dotSql("e.embedding", "qq.qvec")}, 6) AS sim
-       |FROM embeddings e JOIN r USING (vec_id), qq
-       |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin)
+    pqProbeSql(
+      "\nel AS (SELECT vec_id, label FROM embeddings WHERE label < 5),",
+      "\n            JOIN el ON el.vec_id = cd.vec_id"))
 
   /** i74: TOMBSTONE deletes on the ANN index — the lifecycle stage the
     * family was missing (build i63/i67/i69/i71, refresh i68, certify
@@ -2773,37 +2196,16 @@ object LlmOps {
   val i74_ann_tombstone = OpQuery(
     (s, d) => {
       val idx = pqWriteIndex(s, d)
-      val adc = pqAdcLit(s, idx, pqQueryGrid(s, d, 7L))
+      val adc = adcLitFrom(s, AnnIndex.cbDir(idx), pqQueryGrid(s, d, 7L), PqK)
       val e = t(s, d, "embeddings")
       // the deletion log: a side table of vec_ids, nothing rewritten
       val tomb = e.filter(col("vec_id") % 13 === 2).select("vec_id")
       val live = s.read.parquet(idx)
         .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-      val top = pqCodesTop(live, adc, 50, 7L)
-      e.join(broadcast(top), "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), sq8QueryVec(s, d, 7L)), 6))
-        .select("vec_id", "label", "sim")
-        .orderBy(desc("sim"), asc("vec_id"))
-        .limit(10)
+      val top = codesTopK(live, adc, 50, 7L, PqK)
+      rerank10(s, d, top, sq8QueryVec(s, d, 7L))
     },
-    s"""WITH $pqCteSql,
-       |qq AS (SELECT list_transform(embedding,
-       |           x -> CAST(floor(x * 1000) AS BIGINT)) AS qv,
-       |         embedding AS qvec
-       |       FROM embeddings WHERE vec_id = 7),
-       |dt AS (SELECT pm1.sub, pm1.cid,
-       |         sum(qq.qv[pm1.sub * $PqDsub + pm1.pos] * pm1.cv_i) AS ds
-       |       FROM pm1, qq GROUP BY pm1.sub, pm1.cid),
-       |ap AS (SELECT cd.vec_id, sum(dt.ds) AS approx_i
-       |       FROM cd JOIN dt ON cd.sub = dt.sub AND cd.cid = dt.cid
-       |       WHERE cd.vec_id <> 7 AND cd.vec_id % 13 <> 2
-       |       GROUP BY cd.vec_id),
-       |r AS (SELECT vec_id FROM (
-       |    SELECT vec_id, row_number() OVER (ORDER BY approx_i DESC, vec_id) AS rk
-       |    FROM ap) WHERE rk <= 50)
-       |SELECT e.vec_id, e.label, round(${dotSql("e.embedding", "qq.qvec")}, 6) AS sim
-       |FROM embeddings e JOIN r USING (vec_id), qq
-       |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin)
+    pqProbeSql(pred = " AND cd.vec_id % 13 <> 2\n      "))
 
   // -------- tombstone compaction (i77) --------------------------------------
 
@@ -2827,6 +2229,15 @@ object LlmOps {
       .select("vec_id")
   }
 
+  /** Per-cell (cell, n_before, n_tomb) of a codes table against a
+    * tombstone side table.
+    */
+  private def tombProfile(codes: DataFrame, tomb: DataFrame): DataFrame =
+    codes.join(broadcast(tomb.withColumn("dead", lit(1L))), Seq("vec_id"), "left")
+      .groupBy("cell")
+      .agg(count(lit(1)).as("n_before"),
+        coalesce(sum(col("dead")), lit(0L)).as("n_tomb"))
+
   /** Tombstone fraction above which a cell is rewritten. */
   private[graft] val CompactionTau = 0.10
 
@@ -2844,11 +2255,7 @@ object LlmOps {
   private[graft] def compactCells(s: SparkSession, idxDir: String,
       tomb: DataFrame, tau: Double): DataFrame = {
     val codes = s.read.parquet(idxDir)
-    val plan = codes
-      .join(broadcast(tomb.withColumn("dead", lit(1L))), Seq("vec_id"), "left")
-      .groupBy("cell")
-      .agg(count(lit(1)).as("n_before"),
-        coalesce(sum(col("dead")), lit(0L)).as("n_tomb"))
+    val plan = tombProfile(codes, tomb)
       .withColumn("compacted", col("n_tomb") > col("n_before") * lit(tau))
       .localCheckpoint() // read for the dirty-cell filter AND returned
     val dirty = plan.filter(col("compacted")).select("cell")
@@ -2912,8 +2319,7 @@ object LlmOps {
     */
   val i77_ann_compaction = OpQuery(
     (s, d) => {
-      val idx = graft.Util.fixtureOnce(
-        s"i77_compact_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { out =>
+      val idx = graft.Util.fixtureOnce("i77_compact", d) { out =>
         // private base copy of the i71 artifact (i77 mutates it), then
         // ONE compaction pass — build-once so reps and the profile read
         // a deterministic post-compaction state
@@ -2923,11 +2329,7 @@ object LlmOps {
       }
       val tomb = i77Tombstones(s, d)
       // pre-state from the IMMUTABLE parent (the i71 artifact)
-      val pre = s.read.parquet(pqIvfWriteIndex(s, d))
-        .join(broadcast(tomb.withColumn("dead", lit(1L))), Seq("vec_id"), "left")
-        .groupBy("cell")
-        .agg(count(lit(1)).as("n_before"),
-          coalesce(sum(col("dead")), lit(0L)).as("n_tomb"))
+      val pre = tombProfile(s.read.parquet(pqIvfWriteIndex(s, d)), tomb)
       // post-state MEASURED from the compacted artifact
       val post = s.read.parquet(idx)
         .groupBy("cell").agg(count(lit(1)).as("n_live"))
@@ -2943,10 +2345,7 @@ object LlmOps {
           col("n_live"), col("n_tomb_active"))
         .orderBy("cell")
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${lloydCteSql("maxabs > 0")},
        |qv AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 7),
        |tomb AS (SELECT vec_id FROM (
@@ -2989,105 +2388,37 @@ object LlmOps {
     */
   val i72_ann_ivfpq_recall = OpQuery(
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val pqIdx = pqWriteIndex(s, d)
-      val ivfpqIdx = pqIvfWriteIndex(s, d)
-      val cent = sq8IvfCentDir(sq8WriteIndexKmeans(s, d))
       val e = t(s, d, "embeddings")
-      val qb = e.filter(col("vec_id") % 101 === 3)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
-          expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))")
-            .as("qq"))
+      val qb = AnnIndex.planted(e)
         .localCheckpoint() // feeds both probes, the re-ranks AND the truth
-      def hits(stage1: DataFrame, name: String): DataFrame = stage1
-        .join(e.select("vec_id", "embedding"), "vec_id")
-        .join(broadcast(qb.select("q_id", "qvec")), "q_id")
-        .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-          .orderBy(desc("sim"), asc("vec_id"))))
-        .filter(col("rk") <= 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as(name))
-      val pqHits = hits(pqBatchTop(s.read.parquet(pqIdx),
-        s.read.parquet(pqCbDir(pqIdx)), qb, 50), "pq_hit")
-      val ivfpqHits = hits(graft.ops.StreamOps.pqIvfBatchStage1(s, ivfpqIdx,
-        pqCbDir(pqIdx), cent, qb).select("q_id", "vec_id"), "ivfpq_hit")
+      val ivfpq = AnnIndex.adcProbe(s.read.parquet(pqIvfWriteIndex(s, d)),
+        s.read.parquet(AnnIndex.cbDir(pqIdx)), qb, Some(kmCent(s, d)))
       // truth from the persisted once-per-corpus fixture (r11 verdict #7)
-      val exact = s.read.parquet(annCertTruthDir(s, d))
-      exact
-        .join(pqHits, Seq("q_id", "vec_id"), "left")
-        .join(ivfpqHits, Seq("q_id", "vec_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("pq_hit")), lit(0L)).as("n_hit_pq"),
-          coalesce(sum(col("ivfpq_hit")), lit(0L)).as("n_hit_ivfpq"))
-        .withColumn("recall_pq", round(col("n_hit_pq") / col("n_exact"), 6))
-        .withColumn("recall_ivfpq",
-          round(col("n_hit_ivfpq") / col("n_exact"), 6))
-        .select("q_id", "n_exact", "n_hit_pq", "recall_pq",
-          "n_hit_ivfpq", "recall_ivfpq")
-        .orderBy("q_id")
+      AnnIndex.recall(s.read.parquet(annCertTruthDir(s, d)), Seq(
+        "pq" -> pqTop(e, pqIdx, qb),
+        "ivfpq" -> AnnIndex.rerank(ivfpq, e, AnnIndex.TopK))).orderBy("q_id")
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${lloydCteSql("maxabs > 0")},
        |$pqCteSql,
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM embeddings WHERE vec_id % 101 = 3),
-       |dtq AS (SELECT qs.q_id, pm1.sub, pm1.cid,
-       |          sum(qs.qq[pm1.sub * $PqDsub + pm1.pos] * pm1.cv_i) AS ds
-       |        FROM pm1, qs GROUP BY 1, 2, 3),
+       |${AnnIndex.qsSql("embeddings WHERE vec_id % 101 = 3")},
+       |${AnnIndex.dtqSql("dtq", "pm1", "qs", "qq")},
        |ap AS (SELECT dtq.q_id, cd.vec_id, sum(dtq.ds) AS approx_i
        |       FROM cd JOIN dtq ON cd.sub = dtq.sub AND cd.cid = dtq.cid
        |       WHERE cd.vec_id <> dtq.q_id GROUP BY 1, 2),
-       |pr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_i DESC, vec_id) AS rk FROM ap) WHERE rk <= 50),
-       |rr AS (SELECT pr.q_id, pr.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM pr JOIN embeddings e USING (vec_id) JOIN qs USING (q_id)),
-       |p AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM rr) WHERE rk <= 10),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
-       |csim AS (SELECT q_id, centkm.label, round(sum(c * qv), 6) AS s
-       |         FROM centkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qc AS (SELECT q_id, label FROM (
-       |         SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csim) WHERE rk <= 2),
+       |${AnnIndex.rerankSql("pr", "rr", "p", "ap")},
+       |${AnnIndex.qxSql("qs")},
+       |${AnnIndex.csimSql("csim", "centkm")},
+       |${AnnIndex.qcSql("qc", "csim", 2)},
        |ap2 AS (SELECT dtq.q_id, cd.vec_id, sum(dtq.ds) AS approx_i
        |        FROM cd JOIN dtq ON cd.sub = dtq.sub AND cd.cid = dtq.cid
        |             JOIN cellkm ON cellkm.vec_id = cd.vec_id
        |             JOIN qc ON qc.q_id = dtq.q_id AND qc.label = cellkm.cid
        |        WHERE cd.vec_id <> dtq.q_id GROUP BY 1, 2),
-       |pr2 AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_i DESC, vec_id) AS rk FROM ap2) WHERE rk <= 50),
-       |rr2 AS (SELECT pr2.q_id, pr2.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM pr2 JOIN embeddings e USING (vec_id) JOIN qs USING (q_id)),
-       |p2 AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM rr2) WHERE rk <= 10),
-       |bf AS (SELECT qs.q_id, e.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM embeddings e, qs WHERE e.vec_id <> qs.q_id),
-       |bfr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM bf) WHERE rk <= 10)
-       |SELECT bfr.q_id,
-       |  CAST(count(*) AS BIGINT) AS n_exact,
-       |  CAST(count(p.vec_id) AS BIGINT) AS n_hit_pq,
-       |  round(count(p.vec_id) * 1.0 / count(*), 6) AS recall_pq,
-       |  CAST(count(p2.vec_id) AS BIGINT) AS n_hit_ivfpq,
-       |  round(count(p2.vec_id) * 1.0 / count(*), 6) AS recall_ivfpq
-       |FROM bfr
-       |LEFT JOIN p ON bfr.q_id = p.q_id AND bfr.vec_id = p.vec_id
-       |LEFT JOIN p2 ON bfr.q_id = p2.q_id AND bfr.vec_id = p2.vec_id
-       |GROUP BY bfr.q_id ORDER BY bfr.q_id""".stripMargin)
+       |${AnnIndex.rerankSql("pr2", "rr2", "p2", "ap2")},
+       |${AnnIndex.truthSql("qs", 9)}
+       |${AnnIndex.recallSql("p" -> "_pq", "p2" -> "_ivfpq")}""".stripMargin)
 
   /** Build and persist the IVF×PQ index: the PQ codes (i69's artifact)
     * re-laid-out PARTITIONED BY the learned k-means cell (i67's
@@ -3103,8 +2434,7 @@ object LlmOps {
     * (r11 ADVICE).
     */
   def pqIvfWriteIndex(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"i71_ivfpq_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    graft.Util.fixtureOnce("i71_ivfpq", d) { dir =>
       s.read.parquet(pqWriteIndex(s, d)).select("vec_id", "codes")
         .join(s.read.parquet(sq8WriteIndexKmeans(s, d))
           .select(col("vec_id"), col("cell")), "vec_id")
@@ -3138,27 +2468,18 @@ object LlmOps {
       val top2 = ivfCellRank(s, kmIdx, qvec)
         .collect().map(_.getInt(0)).toSeq
       // stage 1: integer ADC over the probed cells' 8-byte codes
-      val top = pqCodesTop(
+      val top = codesTopK(
         s.read.parquet(idx).filter(col("cell").isin(top2: _*)),
-        pqAdcLit(s, pqWriteIndex(s, d), pqQueryGrid(s, d, 7L)), 50, 7L)
+        adcLitFrom(s, AnnIndex.cbDir(pqWriteIndex(s, d)), pqQueryGrid(s, d, 7L),
+          PqK), 50, 7L, PqK)
       // stage 2: exact re-rank of the 50 survivors
-      t(s, d, "embeddings").join(broadcast(top), "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), qvec), 6))
-        .select("vec_id", "label", "sim")
-        .orderBy(desc("sim"), asc("vec_id"))
-        .limit(10)
+      rerank10(s, d, top, qvec)
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${lloydCteSql("maxabs > 0")},
        |$pqCteSql,
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM m WHERE vec_id = 7 AND maxabs > 0),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
+       |${AnnIndex.qsSql("m WHERE vec_id = 7 AND maxabs > 0")},
+       |${AnnIndex.qxSql("qs")},
        |csim AS (SELECT centkm.label, round(sum(c * qv), 6) AS s
        |         FROM centkm JOIN qx USING (pos) GROUP BY 1),
        |qc AS (SELECT label FROM (
@@ -3188,8 +2509,6 @@ object LlmOps {
     */
   private[graft] val PqrK = 256
 
-  def pqrCbDir(idxDir: String): String = idxDir + "_cb"
-
   /** Integer centroid arrays recovered from the persisted k-means
     * centroid artifact: the artifact stores c = cv_i / 1000.0 (a
     * double), and round(c·1000) recovers the EXACT integer-grid
@@ -3200,8 +2519,8 @@ object LlmOps {
     * from the cells `ivfCellRank` ranks.
     */
   private[graft] def kmCentIntArrays(s: SparkSession,
-      kmIdx: String): DataFrame =
-    s.read.parquet(sq8IvfCentDir(kmIdx))
+      centDir: String): DataFrame =
+    s.read.parquet(centDir)
       .select(col("cell"), col("pos"),
         round(col("c") * lit(1000.0), 0).cast(LongType).as("cv_i"))
       .groupBy("cell")
@@ -3233,14 +2552,7 @@ object LlmOps {
       centDir: String, dir: String, cbDir: String,
       carryCols: Seq[String] = Nil,
       perm: Option[Array[Int]] = None): Unit = {
-    val s = emb.sparkSession
-    val centv = s.read.parquet(centDir)
-      .select(col("cell"), col("pos"),
-        round(col("c") * lit(1000.0), 0).cast(LongType).as("cv_i"))
-      .groupBy("cell")
-      .agg(expr(
-        "transform(array_sort(collect_list(struct(pos, cv_i))), p -> p.cv_i)")
-        .as("centv"))
+    val centv = kmCentIntArrays(emb.sparkSession, centDir)
     // the residual on the exact grid; `perm` (i81's OPQ rung) applies an
     // exactly-orthogonal signed-permutation AFTER the subtraction —
     // inner products are preserved, only the subspace grouping changes
@@ -3248,8 +2560,7 @@ object LlmOps {
     val encoded = perm.fold(residual)(p =>
       array(p.map(i => residual.getItem(i)): _*))
     val rq = emb
-      .withColumn("qv0",
-        expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))"))
+      .withColumn("qv0", AnnIndex.grid("embedding"))
       .join(cells, "vec_id") // the cell model's (maxabs-kept) domain
       .join(broadcast(centv), "cell") // k rows
       .select(col("vec_id") +: col("cell") +: carryCols.map(col) :+
@@ -3268,12 +2579,11 @@ object LlmOps {
     val s = emb.sparkSession
     writePqrArtifactsFrom(emb,
       s.read.parquet(kmIdx).select(col("vec_id"), col("cell")),
-      sq8IvfCentDir(kmIdx), dir, pqrCbDir(dir), carryCols = Seq("label"))
+      AnnIndex.centDir(kmIdx), dir, AnnIndex.cbDir(dir), carryCols = Seq("label"))
   }
 
   def pqrWriteIndex(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"i75_rivfpq_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    graft.Util.fixtureOnce("i75_rivfpq", d) { dir =>
       writePqrArtifacts(t(s, d, "embeddings"), sq8WriteIndexKmeans(s, d), dir)
     }
 
@@ -3305,23 +2615,20 @@ object LlmOps {
   val i78_ann_rivfpq_refresh = OpQuery(
     (s, d) => {
       val e = t(s, d, "embeddings")
-      val sfx = d.replaceAll("[^a-zA-Z0-9]", "_")
       // build-once scaffolding: the BASE-corpus artifacts the refresh
       // runs against — the gated op is the refresh, not the build
-      val baseKm = graft.Util.fixtureOnce(s"i78_km_base_$sfx") { dir =>
+      val baseKm = graft.Util.fixtureOnce("i78_km_base", d) { dir =>
         writeKmeansArtifacts(e.filter(col("vec_id") % 7 =!= 5), dir,
-          sq8IvfCentDir(dir))
+          AnnIndex.centDir(dir))
       }
-      val baseIdx = graft.Util.fixtureOnce(s"i78_rivfpq_base_$sfx") { dir =>
+      val baseIdx = graft.Util.fixtureOnce("i78_rivfpq_base", d) { dir =>
         writePqrArtifacts(e.filter(col("vec_id") % 7 =!= 5), baseKm, dir)
       }
-      val c1 = kmCentIntArrays(s, baseKm)
+      val c1 = kmCentIntArrays(s, AnnIndex.centDir(baseKm))
         .select(col("cell").cast(LongType).as("cid"), col("centv").as("cv"))
       val newQ = e.filter(col("vec_id") % 7 === 5)
         .withColumn("maxabs", sqMaxAbs).filter(col("maxabs") > 0)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))")
-            .as("qv"))
+        .select(col("vec_id"), AnnIndex.grid("embedding").as("qv"))
       val assigned = graft.ops.CorpusOps.lloydAssign(newQ, c1)
       val rq = assigned
         .join(broadcast(c1.select(col("cid"), col("cv").as("centv"))), "cid")
@@ -3329,7 +2636,7 @@ object LlmOps {
           zip_with(col("qv"), col("centv"), (a, b) => a - b).as("qv"))
         .localCheckpoint() // feeds the subvector encode AND the cell join
       val codes = pqAssign(pqSubvectors(rq.select("vec_id", "qv")),
-          pqrCbArrays(s, pqrCbDir(baseIdx)))
+          pqrCbArrays(s, AnnIndex.cbDir(baseIdx)))
         .groupBy("vec_id")
         .agg(expr(
           "transform(array_sort(collect_list(struct(sub, cid))), p -> p.cid)")
@@ -3339,10 +2646,7 @@ object LlmOps {
           array_join(col("codes"), ",").as("codes_str"))
         .orderBy("vec_id")
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${lloydCteSql("maxabs > 0 AND vec_id % 7 <> 5")},
        |$pqrCteSql,
        |cellb AS (SELECT DISTINCT cid FROM cellkm),
@@ -3387,12 +2691,32 @@ object LlmOps {
     */
   private[graft] def cellDotMap(s: SparkSession, kmIdx: String,
       qq: Array[Long], cells: Seq[Int]): Map[Int, Long] =
-    kmCentIntArrays(s, kmIdx)
+    kmCentIntArrays(s, AnnIndex.centDir(kmIdx))
       .filter(col("cell").isin(cells: _*))
       .collect() // bounded: nprobe rows
       .map(r => r.getInt(0) ->
         r.getSeq[Long](1).zipWithIndex.map { case (c, i) => c * qq(i) }.sum)
       .toMap
+
+  /** i75's single-query residual IVF-PQ chain for vector 7: stage 0
+    * ranks the learned cells against the persisted centroids and
+    * collects the top 2 into a LITERAL filter; stage 1 is the integer
+    * ADC (with `cbIdx`'s codebook) plus the per-cell centroid term (a
+    * 2-entry literal map) over the caller's candidate pool `codes(top2)`;
+    * stage 2 the exact re-rank of the 50 survivors.
+    */
+  private def residualProbe(s: SparkSession, d: String, cbIdx: String)(
+      codes: Seq[Int] => DataFrame): DataFrame = {
+    val kmIdx = sq8WriteIndexKmeans(s, d)
+    val qvec = sq8QueryVec(s, d, 7L)
+    val qq = pqQueryGrid(s, d, 7L)
+    val top2 = ivfCellRank(s, kmIdx, qvec).collect().map(_.getInt(0)).toSeq
+    val top = codesTopK(codes(top2),
+      adcLitFrom(s, AnnIndex.cbDir(cbIdx), qq, PqrK), 50, 7L, PqrK,
+      cellTerm = element_at(typedLit(cellDotMap(s, kmIdx, qq, top2)),
+        col("cell")))
+    rerank10(s, d, top, qvec)
+  }
 
   /** i75: residual IVF-PQ probe — i71's three-stage serving chain with
     * the residual-encoded index swapped in: stage 0 ranks the SHARED
@@ -3409,62 +2733,11 @@ object LlmOps {
     */
   val i75_sim_ann_ivfpq_residual = OpQuery(
     (s, d) => {
-      val kmIdx = sq8WriteIndexKmeans(s, d)
       val idx = pqrWriteIndex(s, d)
-      val qvec = sq8QueryVec(s, d, 7L)
-      val qq = pqQueryGrid(s, d, 7L)
-      // stage 0: rank learned cells; 2 ids collect into a LITERAL filter
-      val top2 = ivfCellRank(s, kmIdx, qvec).collect().map(_.getInt(0)).toSeq
-      // stage 1: integer ADC over the probed cells' residual codes,
-      // plus the per-cell centroid term (a 2-entry literal map)
-      val top = codesTopK(
-        s.read.parquet(idx).filter(col("cell").isin(top2: _*)),
-        adcLitFrom(s, pqrCbDir(idx), qq, PqrK), 50, 7L, PqrK,
-        cellTerm = element_at(typedLit(cellDotMap(s, kmIdx, qq, top2)),
-          col("cell")))
-      // stage 2: exact re-rank of the 50 survivors
-      t(s, d, "embeddings").join(broadcast(top), "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), qvec), 6))
-        .select("vec_id", "label", "sim")
-        .orderBy(desc("sim"), asc("vec_id"))
-        .limit(10)
+      residualProbe(s, d, idx)(top2 =>
+        s.read.parquet(idx).filter(col("cell").isin(top2: _*)))
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
-       |${lloydCteSql("maxabs > 0")},
-       |$pqrCteSql,
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM m WHERE vec_id = 7 AND maxabs > 0),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
-       |csim AS (SELECT centkm.label, round(sum(c * qv), 6) AS s
-       |         FROM centkm JOIN qx USING (pos) GROUP BY 1),
-       |qc AS (SELECT label FROM (
-       |    SELECT label, row_number() OVER (ORDER BY s DESC, label) AS rk
-       |    FROM csim) WHERE rk <= 2),
-       |rdt AS (SELECT rm1.sub, rm1.cid,
-       |         sum(qs.qq[rm1.sub * $PqDsub + rm1.pos] * rm1.cv_i) AS ds
-       |       FROM rm1, qs GROUP BY 1, 2),
-       |cdt AS (SELECT c1.cid AS cell,
-       |         list_sum(list_transform(range(1, len(c1.cv) + 1),
-       |           i -> qs.qq[i] * c1.cv[i])) AS cd
-       |       FROM c1, qs),
-       |ap AS (SELECT rcd.vec_id, cdt.cd + sum(rdt.ds) AS approx_i
-       |       FROM rcd JOIN rdt ON rcd.sub = rdt.sub AND rcd.cid = rdt.cid
-       |            JOIN cellkm ON cellkm.vec_id = rcd.vec_id
-       |            JOIN qc ON qc.label = cellkm.cid
-       |            JOIN cdt ON cdt.cell = cellkm.cid
-       |       WHERE rcd.vec_id <> 7
-       |       GROUP BY rcd.vec_id, cdt.cd),
-       |r AS (SELECT vec_id FROM (
-       |    SELECT vec_id, row_number() OVER (ORDER BY approx_i DESC, vec_id) AS rk
-       |    FROM ap) WHERE rk <= 50)
-       |SELECT e.vec_id, e.label, round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |FROM embeddings e JOIN r USING (vec_id), qs
-       |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin)
+    rivfpqProbeSql())
 
   /** i79: FILTERED residual ANN — i73's hybrid-search shape composed
     * with i75's production index: the metadata predicate rides the
@@ -3478,82 +2751,31 @@ object LlmOps {
     */
   val i79_sim_ann_rivfpq_filtered = OpQuery(
     (s, d) => {
-      val kmIdx = sq8WriteIndexKmeans(s, d)
       val idx = pqrWriteIndex(s, d)
-      val qvec = sq8QueryVec(s, d, 7L)
-      val qq = pqQueryGrid(s, d, 7L)
-      val top2 = ivfCellRank(s, kmIdx, qvec).collect().map(_.getInt(0)).toSeq
-      val top = codesTopK(
+      residualProbe(s, d, idx)(top2 =>
         s.read.parquet(idx)
           .filter(col("cell").isin(top2: _*)) // partition filter
-          .filter(col("label") < 5),          // pushed row-group filter
-        adcLitFrom(s, pqrCbDir(idx), qq, PqrK), 50, 7L, PqrK,
-        cellTerm = element_at(typedLit(cellDotMap(s, kmIdx, qq, top2)),
-          col("cell")))
-      t(s, d, "embeddings").join(broadcast(top), "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), qvec), 6))
-        .select("vec_id", "label", "sim")
-        .orderBy(desc("sim"), asc("vec_id"))
-        .limit(10)
+          .filter(col("label") < 5))          // pushed row-group filter
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
-       |${lloydCteSql("maxabs > 0")},
-       |$pqrCteSql,
-       |el AS (SELECT vec_id FROM embeddings WHERE label < 5),
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM m WHERE vec_id = 7 AND maxabs > 0),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
-       |csim AS (SELECT centkm.label, round(sum(c * qv), 6) AS s
-       |         FROM centkm JOIN qx USING (pos) GROUP BY 1),
-       |qc AS (SELECT label FROM (
-       |    SELECT label, row_number() OVER (ORDER BY s DESC, label) AS rk
-       |    FROM csim) WHERE rk <= 2),
-       |rdt AS (SELECT rm1.sub, rm1.cid,
-       |         sum(qs.qq[rm1.sub * $PqDsub + rm1.pos] * rm1.cv_i) AS ds
-       |       FROM rm1, qs GROUP BY 1, 2),
-       |cdt AS (SELECT c1.cid AS cell,
-       |         list_sum(list_transform(range(1, len(c1.cv) + 1),
-       |           i -> qs.qq[i] * c1.cv[i])) AS cd
-       |       FROM c1, qs),
-       |ap AS (SELECT rcd.vec_id, cdt.cd + sum(rdt.ds) AS approx_i
-       |       FROM rcd JOIN rdt ON rcd.sub = rdt.sub AND rcd.cid = rdt.cid
-       |            JOIN cellkm ON cellkm.vec_id = rcd.vec_id
-       |            JOIN qc ON qc.label = cellkm.cid
-       |            JOIN cdt ON cdt.cell = cellkm.cid
-       |            JOIN el ON el.vec_id = rcd.vec_id
-       |       WHERE rcd.vec_id <> 7
-       |       GROUP BY rcd.vec_id, cdt.cd),
-       |r AS (SELECT vec_id FROM (
-       |    SELECT vec_id, row_number() OVER (ORDER BY approx_i DESC, vec_id) AS rk
-       |    FROM ap) WHERE rk <= 50)
-       |SELECT e.vec_id, e.label, round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |FROM embeddings e JOIN r USING (vec_id), qs
-       |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin)
+    rivfpqProbeSql(
+      "\nel AS (SELECT vec_id FROM embeddings WHERE label < 5),",
+      "\n            JOIN el ON el.vec_id = rcd.vec_id"))
 
-  /** The i75 probe oracle with a pluggable TOMBSTONE restriction on the
-    * candidate pool — shared by i84 (mod-class tombstones) and i85
-    * (the i77 discovered-cluster tombstones, where the oracle applies
-    * the FULL set while the gate probes compacted-plus-remaining: the
-    * hash match IS the equivalence proof). `extraCtes` precede the
-    * query CTEs; `tombPred` lands in the ap WHERE clause.
+  /** The i75 probe oracle with a pluggable restriction of the candidate
+    * pool — shared by i79 (the pushed label filter, `el`), i84
+    * (mod-class tombstones) and i85 (the i77 discovered-cluster
+    * tombstones, where the oracle applies the FULL set while the gate
+    * probes compacted-plus-remaining: the hash match IS the equivalence
+    * proof). `extraCtes` precede the query CTEs, `extraJoin` follows the
+    * ap joins, `pred` extends the ap WHERE clause.
     */
-  private def rivfpqTombOracleSql(extraCtes: String, tombPred: String): String =
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+  private def rivfpqProbeSql(extraCtes: String = "", extraJoin: String = "",
+      pred: String = ""): String =
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${lloydCteSql("maxabs > 0")},
        |$pqrCteSql,$extraCtes
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM m WHERE vec_id = 7 AND maxabs > 0),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
+       |${AnnIndex.qsSql("m WHERE vec_id = 7 AND maxabs > 0")},
+       |${AnnIndex.qxSql("qs")},
        |csim AS (SELECT centkm.label, round(sum(c * qv), 6) AS s
        |         FROM centkm JOIN qx USING (pos) GROUP BY 1),
        |qc AS (SELECT label FROM (
@@ -3570,8 +2792,8 @@ object LlmOps {
        |       FROM rcd JOIN rdt ON rcd.sub = rdt.sub AND rcd.cid = rdt.cid
        |            JOIN cellkm ON cellkm.vec_id = rcd.vec_id
        |            JOIN qc ON qc.label = cellkm.cid
-       |            JOIN cdt ON cdt.cell = cellkm.cid
-       |       WHERE rcd.vec_id <> 7 $tombPred
+       |            JOIN cdt ON cdt.cell = cellkm.cid$extraJoin
+       |       WHERE rcd.vec_id <> 7$pred
        |       GROUP BY rcd.vec_id, cdt.cd),
        |r AS (SELECT vec_id FROM (
        |    SELECT vec_id, row_number() OVER (ORDER BY approx_i DESC, vec_id) AS rk
@@ -3596,27 +2818,15 @@ object LlmOps {
     */
   val i84_rivfpq_tombstone = OpQuery(
     (s, d) => {
-      val kmIdx = sq8WriteIndexKmeans(s, d)
       val idx = pqrWriteIndex(s, d)
-      val qvec = sq8QueryVec(s, d, 7L)
-      val qq = pqQueryGrid(s, d, 7L)
       // the deletion log: a side table of vec_ids, nothing rewritten
       val tomb = t(s, d, "embeddings")
         .filter(col("vec_id") % 13 === 2).select("vec_id")
-      val top2 = ivfCellRank(s, kmIdx, qvec).collect().map(_.getInt(0)).toSeq
-      val top = codesTopK(
+      residualProbe(s, d, idx)(top2 =>
         s.read.parquet(idx).filter(col("cell").isin(top2: _*))
-          .join(broadcast(tomb), Seq("vec_id"), "left_anti"),
-        adcLitFrom(s, pqrCbDir(idx), qq, PqrK), 50, 7L, PqrK,
-        cellTerm = element_at(typedLit(cellDotMap(s, kmIdx, qq, top2)),
-          col("cell")))
-      t(s, d, "embeddings").join(broadcast(top), "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), qvec), 6))
-        .select("vec_id", "label", "sim")
-        .orderBy(desc("sim"), asc("vec_id"))
-        .limit(10)
+          .join(broadcast(tomb), Seq("vec_id"), "left_anti"))
     },
-    rivfpqTombOracleSql("", "AND rcd.vec_id % 13 <> 2"))
+    rivfpqProbeSql(pred = " AND rcd.vec_id % 13 <> 2"))
 
   /** i85: tombstone COMPACTION on the residual index — i77's threshold
     * policy (with its r13 dead-cell and read-before-overwrite fixes,
@@ -3639,13 +2849,11 @@ object LlmOps {
     */
   val i85_rivfpq_compaction = OpQuery(
     (s, d) => {
-      val kmIdx = sq8WriteIndexKmeans(s, d)
       val baseIdx = pqrWriteIndex(s, d)
       // build-once: a private copy of the residual artifact (the
       // compaction mutates it), then ONE compaction pass — reps and
       // the probe read a deterministic post-compaction state
-      val idx = graft.Util.fixtureOnce(
-        s"i85_rcompact_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { out =>
+      val idx = graft.Util.fixtureOnce("i85_rcompact", d) { out =>
         s.read.parquet(baseIdx)
           .write.mode("overwrite").partitionBy("cell").parquet(out)
         compactCells(s, out, i77Tombstones(s, d), CompactionTau)
@@ -3653,34 +2861,18 @@ object LlmOps {
       val tomb = i77Tombstones(s, d)
       // REMAINING tombstones = those in cells the threshold left alone
       // (compacted cells had theirs physically applied and truncated)
-      val cleanCells = s.read.parquet(baseIdx)
-        .join(broadcast(tomb.withColumn("dead", lit(1L))),
-          Seq("vec_id"), "left")
-        .groupBy("cell")
-        .agg(count(lit(1)).as("n_before"),
-          coalesce(sum(col("dead")), lit(0L)).as("n_tomb"))
+      val cleanCells = tombProfile(s.read.parquet(baseIdx), tomb)
         .filter(!(col("n_tomb") > col("n_before") * lit(CompactionTau)))
         .select("cell")
       val remaining = s.read.parquet(baseIdx).select("vec_id", "cell")
         .join(broadcast(tomb), Seq("vec_id"))
         .join(broadcast(cleanCells), Seq("cell"))
         .select("vec_id")
-      val qvec = sq8QueryVec(s, d, 7L)
-      val qq = pqQueryGrid(s, d, 7L)
-      val top2 = ivfCellRank(s, kmIdx, qvec).collect().map(_.getInt(0)).toSeq
-      val top = codesTopK(
+      residualProbe(s, d, baseIdx)(top2 =>
         s.read.parquet(idx).filter(col("cell").isin(top2: _*))
-          .join(broadcast(remaining), Seq("vec_id"), "left_anti"),
-        adcLitFrom(s, pqrCbDir(baseIdx), qq, PqrK), 50, 7L, PqrK,
-        cellTerm = element_at(typedLit(cellDotMap(s, kmIdx, qq, top2)),
-          col("cell")))
-      t(s, d, "embeddings").join(broadcast(top), "vec_id")
-        .withColumn("sim", round(dot(col("embedding"), qvec), 6))
-        .select("vec_id", "label", "sim")
-        .orderBy(desc("sim"), asc("vec_id"))
-        .limit(10)
+          .join(broadcast(remaining), Seq("vec_id"), "left_anti"))
     },
-    rivfpqTombOracleSql(
+    rivfpqProbeSql(
       s"""
          |qv7 AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 7),
          |tomb AS (SELECT vec_id FROM (
@@ -3689,7 +2881,7 @@ object LlmOps {
          |               e.vec_id) AS rk
          |    FROM embeddings e, qv7 WHERE e.vec_id <> 7)
          |  WHERE rk <= greatest(60, (SELECT count(*) FROM embeddings) // 10)),""".stripMargin,
-      "AND rcd.vec_id NOT IN (SELECT vec_id FROM tomb)"))
+      pred = " AND rcd.vec_id NOT IN (SELECT vec_id FROM tomb)"))
 
   /** The residual-PQ train+encode CTE block — the SQL mirror of
     * `pqrWriteIndex` (the pqCteSql convention, r-prefixed so it
@@ -3778,78 +2970,30 @@ object LlmOps {
             |  FROM lq JOIN cellkm USING (vec_id)
             |       JOIN c1 ON c1.cid = cellkm.cid, parr)""".stripMargin)}""".stripMargin
 
-  /** The batched residual IVF-PQ probe — pqBatchTop with i75's levers:
-    * per-query top-nprobe learned cells restrict the codes scan (a
-    * literal partition filter over the batch's cell union, then the
-    * per-query cell join), the per-query 2,048-row integer ADC tables
-    * rank the residual codes map-side, and the per-(query, cell)
-    * centroid term re-bases scores across cells. Everything joined
-    * against the N-sized codes scan is broadcast (batch × constant).
-    * Returns the approx top-`n` (q_id, vec_id) survivors.
+  /** The learned k-means cells' centroid artifact (the shared
+    * sq8WriteIndexKmeans build every cell-pruned PQ probe ranks).
     */
-  private[graft] def pqrBatchTop(s: SparkSession, idxDir: String,
-      centDir: String, qb: DataFrame, n: Int,
-      nprobe: Int = 2, cbDirOpt: Option[String] = None,
-      adcGridCol: String = "qq",
-      // the deletion log (j27/i84): tombstoned vec_ids anti-joined out
-      // of the codes scan BEFORE the rank window — filtering after the
-      // cut would return short exactly when a deleted vector ranked
-      // high (the i73/i74 correctness rule); broadcast side table
-      tombstones: Option[DataFrame] = None,
-      // per-op hoisted side frames (r14 verdict #2): serving harnesses
-      // load the k×64 centroid table (read TWICE below: cell rank +
-      // centroid term) and the constant-size codebook once per op and
-      // pass them here, so a micro-batch re-plans but never re-loads
-      // the statics; idxDf shares one lazy scan handle (file listing
-      // resolved once, the per-batch cell partition filter unchanged)
-      centDf: Option[DataFrame] = None,
-      cbDf: Option[DataFrame] = None,
-      idxDf: Option[DataFrame] = None): DataFrame = {
-    // adcGridCol: the query-grid column the per-subspace ADC tables are
-    // built from — "qq" for the plain residual index; i81's OPQ probe
-    // passes its PERMUTED grid here while the cell rank (qvec) and the
-    // cell term (qq) stay on the original axes, because a permutation
-    // preserves q·c exactly but regroups which dims share a subspace
-    val cbDir = cbDirOpt.getOrElse(pqrCbDir(idxDir))
-    import org.apache.spark.sql.expressions.Window
-    val cent = centDf.getOrElse(s.read.parquet(centDir))
-    val qcells = graft.ops.StreamOps.ivfBatchCells(cent, qb, nprobe)
-    val cells = qcells.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq // bounded: ≤ k cell ids
-    val qx = qb.select(col("q_id"),
-        posexplode(col(adcGridCol)).as(Seq("p0", "qv")))
-      .withColumn("sub", expr(s"p0 DIV $PqDsub"))
-      .withColumn("pos", expr(s"p0 % $PqDsub"))
-    val dtq = cbDf.getOrElse(s.read.parquet(cbDir))
-      .join(broadcast(qx), Seq("sub", "pos"))
-      .groupBy("q_id", "sub", "cid")
-      .agg(sum(col("cv_i") * col("qv")).as("ds"))
-    // per-(query, cell) centroid term from the k×64 artifact
-    val centI = cent
-      .select(col("cell"), col("pos").as("cp"),
-        round(col("c") * lit(1000.0), 0).cast(LongType).as("cv_i"))
-    val qfull = qb.select(col("q_id"), posexplode(col("qq")).as(Seq("cp", "qv")))
-    val cdot = centI.join(broadcast(qfull), Seq("cp"))
-      .groupBy("q_id", "cell").agg(sum(col("cv_i") * col("qv")).as("cd"))
-    tombstones.foldLeft(
-        idxDf.getOrElse(s.read.parquet(idxDir))
-          .filter(col("cell").isin(cells: _*)))(
-        (codes, tomb) =>
-          codes.join(broadcast(tomb.select("vec_id")), Seq("vec_id"),
-            "left_anti"))
-      .select(col("vec_id"), col("cell"),
-        posexplode(col("codes")).as(Seq("sub", "cid")))
-      .join(broadcast(qcells), Seq("cell")) // each query scores its OWN cells
-      .join(broadcast(dtq), Seq("q_id", "sub", "cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id", "cell")
-      .agg(sum("ds").as("rds"))
-      .join(broadcast(cdot), Seq("q_id", "cell"))
-      .withColumn("approx_i", col("cd") + col("rds"))
-      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-        .orderBy(desc("approx_i"), asc("vec_id"))))
-      .filter(col("rk") <= n)
-      .select("q_id", "vec_id")
+  private def kmCent(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(AnnIndex.centDir(sq8WriteIndexKmeans(s, d)))
+
+  /** Flat PQ chain: the batched ADC probe over every code of `idx`,
+    * exact top-10 re-rank.
+    */
+  private def pqTop(e: DataFrame, idx: String, qb: DataFrame): DataFrame = {
+    val s = e.sparkSession
+    AnnIndex.rerank(AnnIndex.adcProbe(s.read.parquet(idx),
+      s.read.parquet(AnnIndex.cbDir(idx)), qb), e, AnnIndex.TopK)
+  }
+
+  /** Residual IVF-PQ chain at nprobe = 2 (with `perm`, the OPQ rung):
+    * the batched cell-pruned ADC probe of `idx`, exact top-10 re-rank.
+    */
+  private def residualTop(e: DataFrame, idx: String, cent: DataFrame,
+      qb: DataFrame, perm: Option[Array[Int]] = None): DataFrame = {
+    val s = e.sparkSession
+    AnnIndex.rerank(AnnIndex.adcProbe(s.read.parquet(idx),
+      s.read.parquet(AnnIndex.cbDir(idx)), qb, Some(cent), residual = true,
+      perm = perm), e, AnnIndex.TopK)
   }
 
   /** The brute-force top-10 truth for the planted certification query
@@ -3862,20 +3006,9 @@ object LlmOps {
     * so the fixture stays hash-audited every round.
     */
   private[graft] def annCertTruthDir(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"ann_cert_truth_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
-      import org.apache.spark.sql.expressions.Window
+    graft.Util.fixtureOnce("ann_cert_truth", d) { dir =>
       val e = t(s, d, "embeddings")
-      val qb = e.filter(col("vec_id") % 101 === 3)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-      e.crossJoin(broadcast(qb))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-          .orderBy(desc("sim"), asc("vec_id"))))
-        .filter(col("rk") <= 10)
-        .select("q_id", "vec_id")
-        .write.mode("overwrite").parquet(dir)
+      AnnIndex.truth(e, AnnIndex.planted(e)).write.mode("overwrite").parquet(dir)
     }
 
   /** i76: recall@10 certification of the RESIDUAL IVF-PQ index beside
@@ -3892,112 +3025,28 @@ object LlmOps {
     */
   val i76_ann_rivfpq_recall = OpQuery(
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val pqIdx = pqWriteIndex(s, d)
-      val rIdx = pqrWriteIndex(s, d)
-      val cent = sq8IvfCentDir(sq8WriteIndexKmeans(s, d))
       val e = t(s, d, "embeddings")
-      val qb = e.filter(col("vec_id") % 101 === 3)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
-          expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))")
-            .as("qq"))
+      val qb = AnnIndex.planted(e)
         .localCheckpoint() // feeds both probes AND both re-ranks
-      def hits(stage1: DataFrame, name: String): DataFrame = stage1
-        .join(e.select("vec_id", "embedding"), "vec_id")
-        .join(broadcast(qb.select("q_id", "qvec")), "q_id")
-        .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-          .orderBy(desc("sim"), asc("vec_id"))))
-        .filter(col("rk") <= 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as(name))
-      val pqHits = hits(pqBatchTop(s.read.parquet(pqIdx),
-        s.read.parquet(pqCbDir(pqIdx)), qb, 50), "pq_hit")
-      val rHits = hits(pqrBatchTop(s, rIdx, cent, qb, 50), "rivfpq_hit")
-      s.read.parquet(annCertTruthDir(s, d))
-        .join(pqHits, Seq("q_id", "vec_id"), "left")
-        .join(rHits, Seq("q_id", "vec_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("pq_hit")), lit(0L)).as("n_hit_pq"),
-          coalesce(sum(col("rivfpq_hit")), lit(0L)).as("n_hit_rivfpq"))
-        .withColumn("recall_pq", round(col("n_hit_pq") / col("n_exact"), 6))
-        .withColumn("recall_rivfpq",
-          round(col("n_hit_rivfpq") / col("n_exact"), 6))
-        .select("q_id", "n_exact", "n_hit_pq", "recall_pq",
-          "n_hit_rivfpq", "recall_rivfpq")
+      AnnIndex.recall(s.read.parquet(annCertTruthDir(s, d)), Seq(
+        "pq" -> pqTop(e, pqWriteIndex(s, d), qb),
+        "rivfpq" -> residualTop(e, pqrWriteIndex(s, d), kmCent(s, d), qb)))
         .orderBy("q_id")
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${lloydCteSql("maxabs > 0")},
        |$pqCteSql,
        |$pqrCteSql,
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM embeddings WHERE vec_id % 101 = 3),
-       |dtq AS (SELECT qs.q_id, pm1.sub, pm1.cid,
-       |          sum(qs.qq[pm1.sub * $PqDsub + pm1.pos] * pm1.cv_i) AS ds
-       |        FROM pm1, qs GROUP BY 1, 2, 3),
+       |${AnnIndex.qsSql("embeddings WHERE vec_id % 101 = 3")},
+       |${AnnIndex.dtqSql("dtq", "pm1", "qs", "qq")},
        |ap AS (SELECT dtq.q_id, cd.vec_id, sum(dtq.ds) AS approx_i
        |       FROM cd JOIN dtq ON cd.sub = dtq.sub AND cd.cid = dtq.cid
        |       WHERE cd.vec_id <> dtq.q_id GROUP BY 1, 2),
-       |pr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_i DESC, vec_id) AS rk FROM ap) WHERE rk <= 50),
-       |rr AS (SELECT pr.q_id, pr.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM pr JOIN embeddings e USING (vec_id) JOIN qs USING (q_id)),
-       |p AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM rr) WHERE rk <= 10),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
-       |csim AS (SELECT q_id, centkm.label, round(sum(c * qv), 6) AS s
-       |         FROM centkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qc AS (SELECT q_id, label FROM (
-       |         SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csim) WHERE rk <= 2),
-       |rdtq AS (SELECT qs.q_id, rm1.sub, rm1.cid,
-       |          sum(qs.qq[rm1.sub * $PqDsub + rm1.pos] * rm1.cv_i) AS ds
-       |        FROM rm1, qs GROUP BY 1, 2, 3),
-       |cdtq AS (SELECT qs.q_id, c1.cid AS cell,
-       |          list_sum(list_transform(range(1, len(c1.cv) + 1),
-       |            i -> qs.qq[i] * c1.cv[i])) AS cd
-       |        FROM c1, qs),
-       |apr AS (SELECT rdtq.q_id, rcd.vec_id, cdtq.cd + sum(rdtq.ds) AS approx_i
-       |        FROM rcd JOIN rdtq ON rcd.sub = rdtq.sub AND rcd.cid = rdtq.cid
-       |             JOIN cellkm ON cellkm.vec_id = rcd.vec_id
-       |             JOIN qc ON qc.q_id = rdtq.q_id AND qc.label = cellkm.cid
-       |             JOIN cdtq ON cdtq.q_id = rdtq.q_id AND cdtq.cell = cellkm.cid
-       |        WHERE rcd.vec_id <> rdtq.q_id
-       |        GROUP BY rdtq.q_id, rcd.vec_id, cdtq.cd),
-       |pr2 AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_i DESC, vec_id) AS rk FROM apr) WHERE rk <= 50),
-       |rr2 AS (SELECT pr2.q_id, pr2.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM pr2 JOIN embeddings e USING (vec_id) JOIN qs USING (q_id)),
-       |p2 AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM rr2) WHERE rk <= 10),
-       |bf AS (SELECT qs.q_id, e.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM embeddings e, qs WHERE e.vec_id <> qs.q_id),
-       |bfr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM bf) WHERE rk <= 10)
-       |SELECT bfr.q_id,
-       |  CAST(count(*) AS BIGINT) AS n_exact,
-       |  CAST(count(p.vec_id) AS BIGINT) AS n_hit_pq,
-       |  round(count(p.vec_id) * 1.0 / count(*), 6) AS recall_pq,
-       |  CAST(count(p2.vec_id) AS BIGINT) AS n_hit_rivfpq,
-       |  round(count(p2.vec_id) * 1.0 / count(*), 6) AS recall_rivfpq
-       |FROM bfr
-       |LEFT JOIN p ON bfr.q_id = p.q_id AND bfr.vec_id = p.vec_id
-       |LEFT JOIN p2 ON bfr.q_id = p2.q_id AND bfr.vec_id = p2.vec_id
-       |GROUP BY bfr.q_id ORDER BY bfr.q_id""".stripMargin)
+       |${AnnIndex.rerankSql("pr", "rr", "p", "ap")},
+       |${AnnIndex.residualBatchSql()},
+       |${AnnIndex.rerankSql("pr2", "rr2", "p2", "apr")},
+       |${AnnIndex.truthSql("qs", 9)}
+       |${AnnIndex.recallSql("p" -> "_pq", "p2" -> "_rivfpq")}""".stripMargin)
 
   /** The OPQ permutation (i81): dims of the kept ×1000 grid ranked by
     * EXACT integer variance (n·Σx² − (Σx)², engine-identical — no
@@ -4022,9 +3071,7 @@ object LlmOps {
     */
   private[graft] def opqDimVars(kept: DataFrame): Array[(Int, Long)] =
     kept
-      .select(posexplode(
-        expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))"))
-        .as(Seq("pos", "v")))
+      .select(posexplode(AnnIndex.grid("embedding")).as(Seq("pos", "v")))
       .groupBy("pos").agg(count(lit(1)).as("n"), sum("v").as("sx"),
         sum(expr("v * v")).as("sxx"))
       .collect() // bounded: 64 rows (one per dim)
@@ -4073,11 +3120,10 @@ object LlmOps {
     * already makes.
     */
   def opqDecideArtifact(emb: DataFrame, annIdxDir: String, centDir: String,
-      codesDir: String, cbDir: String, nQueries: Int = 32,
-      skewThresholdMicro: Long = 2000000L): Map[String, Long] = {
-    import org.apache.spark.sql.expressions.Window
+      codesDir: String, cbDir: String): Map[String, Long] = {
+    val skewThresholdMicro = 2000000L
     val s = emb.sparkSession
-    val kept = emb.withColumn("maxabs", sqMaxAbs).filter(col("maxabs") > 0)
+    val kept = AnnIndex.kept(emb)
     val skew = opqSkewMicro(kept)
     val decision = Map(
       "ann_opq_skew_micro" -> skew,
@@ -4092,30 +3138,15 @@ object LlmOps {
         java.nio.file.Paths.get(codesDir).resolveSibling(
           new java.io.File(codesDir).getName + "_perm.json"),
         perm.mkString("[", ",", "]") + "\n")
-      val (qb0, exact) = annTruth(emb, nQueries)
-      val qb = qb0.withColumn("qq",
-          expr("transform(qvec, x -> CAST(floor(x * 1000) AS BIGINT))"))
-        .withColumn("qqo", array(perm.map(i => col("qq").getItem(i)): _*))
-      val pruned = pqrBatchTop(s, codesDir, centDir, qb, 50,
-          cbDirOpt = Some(cbDir), adcGridCol = "qqo")
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(broadcast(qb0), "q_id")
-        .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-          .orderBy(desc("sim"), asc("vec_id"))))
-        .filter(col("rk") <= 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-      val row = exact.join(pruned, Seq("q_id", "vec_id"), "left")
-        .agg(countDistinct(col("q_id")), count(lit(1)),
-          coalesce(sum(col("hit")), lit(0L))).head()
-      val (nq, nExact, nHit) = (row.getLong(0), row.getLong(1), row.getLong(2))
+      val qb = AnnIndex.sampled(emb, AnnIndex.CertQueries)
+      val codes = s.read.parquet(codesDir)
       decision ++ Map(
         "ann_opq_applied" -> 1L,
-        "n_ann_opq_vectors" -> s.read.parquet(codesDir).count(),
-        "ann_opq_recall_n_queries" -> nq,
-        "ann_opq_recall_hits" -> nHit,
-        "ann_opq_recall_at10_micro" ->
-          (if (nExact == 0) 0L else math.floor(nHit * 1e6 / nExact).toLong))
+        "n_ann_opq_vectors" -> codes.count()) ++
+        AnnIndex.certify("ann_opq_", AnnIndex.truth(emb, qb), AnnIndex.rerank(
+          AnnIndex.adcProbe(codes, s.read.parquet(cbDir), qb,
+            Some(s.read.parquet(centDir)), residual = true, perm = Some(perm)),
+          emb, AnnIndex.TopK))
     }
   }
 
@@ -4125,12 +3156,11 @@ object LlmOps {
     * sq8WriteIndexKmeans artifacts (the permutation changes neither).
     */
   def opqWriteIndex(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"i81_opq_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    graft.Util.fixtureOnce("i81_opq", d) { dir =>
       val kmIdx = sq8WriteIndexKmeans(s, d)
       writePqrArtifactsFrom(t(s, d, "embeddings"),
         s.read.parquet(kmIdx).select(col("vec_id"), col("cell")),
-        sq8IvfCentDir(kmIdx), dir, pqrCbDir(dir),
+        AnnIndex.centDir(kmIdx), dir, AnnIndex.cbDir(dir),
         carryCols = Seq("label"), perm = Some(opqPerm(s, d)))
     }
 
@@ -4156,126 +3186,37 @@ object LlmOps {
     */
   val i81_ann_opq_recall = OpQuery(
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val rIdx = pqrWriteIndex(s, d)
-      val oIdx = opqWriteIndex(s, d)
-      val cent = sq8IvfCentDir(sq8WriteIndexKmeans(s, d))
-      val perm = opqPerm(s, d)
       val e = t(s, d, "embeddings")
-      val qq0 = expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))")
-      val qb = e.filter(col("vec_id") % 101 === 3)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
-          qq0.as("qq"),
-          // the PERMUTED query grid feeds ONLY the o-chain's ADC tables
-          array(perm.map(i => qq0.getItem(i)): _*).as("qqo"))
+      val qb = AnnIndex.planted(e)
         .localCheckpoint() // feeds both probes AND both re-ranks
-      def hits(stage1: DataFrame, name: String): DataFrame = stage1
-        .join(e.select("vec_id", "embedding"), "vec_id")
-        .join(broadcast(qb.select("q_id", "qvec")), "q_id")
-        .withColumn("sim", round(dot(col("embedding"), col("qvec")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-          .orderBy(desc("sim"), asc("vec_id"))))
-        .filter(col("rk") <= 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as(name))
       // one centroid load serves both chains' cell ranks AND both
       // centroid terms (r14 verdict #2: it was read 4× here)
-      val centDf = s.read.parquet(cent).localCheckpoint()
-      val rHits = hits(pqrBatchTop(s, rIdx, cent, qb, 50,
-        centDf = Some(centDf)), "rivfpq_hit")
-      val oHits = hits(pqrBatchTop(s, oIdx, cent, qb, 50,
-        cbDirOpt = Some(pqrCbDir(oIdx)), adcGridCol = "qqo",
-        centDf = Some(centDf)), "opq_hit")
-      s.read.parquet(annCertTruthDir(s, d))
-        .join(rHits, Seq("q_id", "vec_id"), "left")
-        .join(oHits, Seq("q_id", "vec_id"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(col("rivfpq_hit")), lit(0L)).as("n_hit_rivfpq"),
-          coalesce(sum(col("opq_hit")), lit(0L)).as("n_hit_opq"))
-        .withColumn("recall_rivfpq",
-          round(col("n_hit_rivfpq") / col("n_exact"), 6))
-        .withColumn("recall_opq", round(col("n_hit_opq") / col("n_exact"), 6))
-        .select("q_id", "n_exact", "n_hit_rivfpq", "recall_rivfpq",
-          "n_hit_opq", "recall_opq")
-        .orderBy("q_id")
+      val cent = kmCent(s, d).localCheckpoint()
+      AnnIndex.recall(s.read.parquet(annCertTruthDir(s, d)), Seq(
+        "rivfpq" -> residualTop(e, pqrWriteIndex(s, d), cent, qb),
+        // the PERMUTED query grid feeds ONLY the o-chain's ADC tables
+        "opq" -> residualTop(e, opqWriteIndex(s, d), cent, qb,
+          Some(opqPerm(s, d))))).orderBy("q_id")
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${lloydCteSql("maxabs > 0")},
        |$pqrCteSql,
        |$opqCteSql,
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM embeddings WHERE vec_id % 101 = 3),
+       |${AnnIndex.qsSql("embeddings WHERE vec_id % 101 = 3")},
        |qso AS (SELECT q_id, list_transform(range(1, 65),
        |          i -> qq[parr.p[i]]) AS qqo FROM qs, parr),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
-       |csim AS (SELECT q_id, centkm.label, round(sum(c * qv), 6) AS s
-       |         FROM centkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qc AS (SELECT q_id, label FROM (
-       |         SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csim) WHERE rk <= 2),
-       |cdtq AS (SELECT qs.q_id, c1.cid AS cell,
-       |          list_sum(list_transform(range(1, len(c1.cv) + 1),
-       |            i -> qs.qq[i] * c1.cv[i])) AS cd
-       |        FROM c1, qs),
-       |rdtq AS (SELECT qs.q_id, rm1.sub, rm1.cid,
-       |          sum(qs.qq[rm1.sub * $PqDsub + rm1.pos] * rm1.cv_i) AS ds
-       |        FROM rm1, qs GROUP BY 1, 2, 3),
-       |apr AS (SELECT rdtq.q_id, rcd.vec_id, cdtq.cd + sum(rdtq.ds) AS approx_i
-       |        FROM rcd JOIN rdtq ON rcd.sub = rdtq.sub AND rcd.cid = rdtq.cid
-       |             JOIN cellkm ON cellkm.vec_id = rcd.vec_id
-       |             JOIN qc ON qc.q_id = rdtq.q_id AND qc.label = cellkm.cid
-       |             JOIN cdtq ON cdtq.q_id = rdtq.q_id AND cdtq.cell = cellkm.cid
-       |        WHERE rcd.vec_id <> rdtq.q_id
-       |        GROUP BY rdtq.q_id, rcd.vec_id, cdtq.cd),
-       |pr2 AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_i DESC, vec_id) AS rk FROM apr) WHERE rk <= 50),
-       |rr2 AS (SELECT pr2.q_id, pr2.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM pr2 JOIN embeddings e USING (vec_id) JOIN qs USING (q_id)),
-       |p2 AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM rr2) WHERE rk <= 10),
-       |odtq AS (SELECT qso.q_id, om1.sub, om1.cid,
-       |          sum(qso.qqo[om1.sub * $PqDsub + om1.pos] * om1.cv_i) AS ds
-       |        FROM om1, qso GROUP BY 1, 2, 3),
-       |oapr AS (SELECT odtq.q_id, ocd.vec_id, cdtq.cd + sum(odtq.ds) AS approx_i
-       |        FROM ocd JOIN odtq ON ocd.sub = odtq.sub AND ocd.cid = odtq.cid
-       |             JOIN cellkm ON cellkm.vec_id = ocd.vec_id
-       |             JOIN qc ON qc.q_id = odtq.q_id AND qc.label = cellkm.cid
-       |             JOIN cdtq ON cdtq.q_id = odtq.q_id AND cdtq.cell = cellkm.cid
-       |        WHERE ocd.vec_id <> odtq.q_id
-       |        GROUP BY odtq.q_id, ocd.vec_id, cdtq.cd),
-       |opr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_i DESC, vec_id) AS rk FROM oapr) WHERE rk <= 50),
-       |orr AS (SELECT opr.q_id, opr.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM opr JOIN embeddings e USING (vec_id) JOIN qs USING (q_id)),
-       |op AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM orr) WHERE rk <= 10),
-       |bf AS (SELECT qs.q_id, e.vec_id,
-       |         round(${dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM embeddings e, qs WHERE e.vec_id <> qs.q_id),
-       |bfr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY sim DESC, vec_id) AS rk FROM bf) WHERE rk <= 10)
-       |SELECT bfr.q_id,
-       |  CAST(count(*) AS BIGINT) AS n_exact,
-       |  CAST(count(p2.vec_id) AS BIGINT) AS n_hit_rivfpq,
-       |  round(count(p2.vec_id) * 1.0 / count(*), 6) AS recall_rivfpq,
-       |  CAST(count(op.vec_id) AS BIGINT) AS n_hit_opq,
-       |  round(count(op.vec_id) * 1.0 / count(*), 6) AS recall_opq
-       |FROM bfr
-       |LEFT JOIN p2 ON bfr.q_id = p2.q_id AND bfr.vec_id = p2.vec_id
-       |LEFT JOIN op ON bfr.q_id = op.q_id AND bfr.vec_id = op.vec_id
-       |GROUP BY bfr.q_id ORDER BY bfr.q_id""".stripMargin)
+       |${AnnIndex.qxSql("qs")},
+       |${AnnIndex.csimSql("csim", "centkm")},
+       |${AnnIndex.qcSql("qc", "csim", 2)},
+       |${AnnIndex.cdtqSql},
+       |${AnnIndex.dtqSql("rdtq", "rm1", "qs", "qq")},
+       |${AnnIndex.residualApSql("apr", "rdtq", "rcd")},
+       |${AnnIndex.rerankSql("pr2", "rr2", "p2", "apr")},
+       |${AnnIndex.dtqSql("odtq", "om1", "qso", "qqo")},
+       |${AnnIndex.residualApSql("oapr", "odtq", "ocd")},
+       |${AnnIndex.rerankSql("opr", "orr", "op", "oapr")},
+       |${AnnIndex.truthSql("qs", 9)}
+       |${AnnIndex.recallSql("p2" -> "_rivfpq", "op" -> "_opq")}""".stripMargin)
 
   /** i9: fused text+vector query — filter documents by text predicate, rank
     * by similarity to a query vector (multimodal enrichment shape).
@@ -5217,7 +4158,7 @@ object LlmOps {
       // reads this dir LAZILY, so a later i54 run on another dataset in
       // the same session must not clobber the one a held plan points at
       val dir = graft.Util.scratch(
-        s"i54_index_${d.replaceAll("[^a-zA-Z0-9]", "_")}")
+        s"i54_index_${graft.Util.sfTag(d)}")
       val base = shingleSets(t(s, d, "documents"))
         .localCheckpoint() // feeds signatures AND both verify lookups once
       val banded = withBandBuckets(base).select(col("doc_id"), col("bucket"))

@@ -865,8 +865,7 @@ object MultimodalOps {
     * sums) to per-pixel.
     */
   private[graft] def jpegMediaDir(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"m13_media_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    graft.Util.fixtureOnce("m13_media", d) { dir =>
       import s.implicits._
       t(s, d, "documents").filter(col("doc_id") % 2 === 0)
         .select("doc_id").as[Long]

@@ -186,7 +186,7 @@ object ScanOps {
       // when two SFs run in the same JVM (nation/region in a7/a10 are
       // constant-size, so only a11 needs this).
       val fitsPath = graft.Util.scratch(
-        s"emb_varlen_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")
+        s"emb_varlen_${graft.Util.sfTag(d)}.fits")
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"),
           expr("slice(embedding, 1, CAST(vec_id % 5 AS INT))").as("head_var"))
@@ -253,7 +253,7 @@ object ScanOps {
     (s, d) => {
       // per-sfDir fixture name: spec memoization, the a11 rule
       val fitsPath = graft.Util.scratch(
-        s"supplier_tiled_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")
+        s"supplier_tiled_${graft.Util.sfTag(d)}.fits")
       graft.fits.FitsWriter.writeTiledDataFrame(fitsPath,
         t(s, d, "supplier").orderBy("s_suppkey"), tileLen = 32,
         strLens = Map("s_name" -> 24))
@@ -286,8 +286,7 @@ object ScanOps {
       import s.implicits._
       val height = t(s, d, "documents").count() // fixture size, not data
       // build-once scaffolding (r8 #7): the op under test is the READER
-      val path = graft.Util.fixtureOnce(
-        s"survey_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("survey", d, ".fits")(p =>
         graft.fits.FitsWriter.writeImageFits(p, 64, height))
       // split count derives from the DATA (r10 verdict #3: the tiled
       // readers' convention ported back to the plain-raster paths) —
@@ -396,8 +395,7 @@ object ScanOps {
       import s.implicits._
       val height = t(s, d, "documents").count()
       // build-once scaffolding (r8 #7): the op under test is the cutout
-      val path = graft.Util.fixtureOnce(
-        s"survey_${d.replaceAll("[^a-zA-Z0-9]", "_")}_cut.fits")(p =>
+      val path = graft.Util.fixtureOnce("survey", d, "_cut.fits")(p =>
         graft.fits.FitsWriter.writeImageFits(p, 64, height))
       val (y0, y1, x0, x1) = (height / 4, height / 2, 16, 48)
       imageCutoutFrame(s, path, y0, y1, x0, x1).orderBy("y")
@@ -435,8 +433,7 @@ object ScanOps {
       val depth = t(s, d, "documents").count() / 64 + 2 // ≥2 planes at any SF
       val h = 64L
       // build-once scaffolding (r8 #7): the op under test is the READER
-      val path = graft.Util.fixtureOnce(
-        s"cube_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("cube", d, ".fits")(p =>
         graft.fits.FitsWriter.writeCubeFits(p, 64, h, depth))
       // split count from the data: the widest extension's row prices
       // the unit (one driver-side header walk, the r10 convention)
@@ -544,8 +541,7 @@ object ScanOps {
       val depth = t(s, d, "documents").count() / 64 + 2
       val h = 64L
       // build-once scaffolding (r8 #7): the op under test is the cutout
-      val path = graft.Util.fixtureOnce(
-        s"cube_${d.replaceAll("[^a-zA-Z0-9]", "_")}_cut.fits")(p =>
+      val path = graft.Util.fixtureOnce("cube", d, "_cut.fits")(p =>
         graft.fits.FitsWriter.writeCubeFits(p, 64, h, depth))
       cubeCutoutFrame(s, path, 1L, depth, 16L, 48L, 8, 40).orderBy("z", "y")
     },
@@ -616,8 +612,7 @@ object ScanOps {
       import s.implicits._
       val h = 64L
       val nFrames = 4
-      val dir = graft.Util.fixtureOnce(
-        s"mosaic_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { p =>
+      val dir = graft.Util.fixtureOnce("mosaic", d) { p =>
         new java.io.File(p).mkdirs()
         val rows = (0 until nFrames).map { f =>
           val fp = s"$p/frame$f.fits"
@@ -759,8 +754,7 @@ object ScanOps {
       val depth = t(s, d, "documents").count() / 64 + 2
       val h = 64L
       // shares a25/a26's fixture (same planted cube — build-once, r8 #7)
-      val path = graft.Util.fixtureOnce(
-        s"cube_${d.replaceAll("[^a-zA-Z0-9]", "_")}_cut.fits")(p =>
+      val path = graft.Util.fixtureOnce("cube", d, "_cut.fits")(p =>
         graft.fits.FitsWriter.writeCubeFits(p, 64, h, depth))
       // the client's request: a26's pixel window [1, depth) × [16, 48) ×
       // [8, 40) EXPRESSED IN WORLD COORDINATES through the planted WCS
@@ -959,8 +953,7 @@ object ScanOps {
       val height = t(s, d, "documents").count() // fixture size, not data
       val tileRows = 64
       // build-once scaffolding (r8 #7): the op under test is the READER
-      val path = graft.Util.fixtureOnce(
-        s"survey_ztiled_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("survey_ztiled", d, ".fits")(p =>
         graft.fits.FitsWriter.writeTiledImageFits(p, 64, height, tileRows))
       val nTiles = (height + tileRows - 1) / tileRows
       tiledImageStats(s, path, nHdus = 2, nTiles)
@@ -1008,7 +1001,7 @@ object ScanOps {
       val height = t(s, d, "documents").count() // frame size, not data
       val tileRows = 64
       val path = graft.Util.scratch(
-        s"survey_ztsink_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")
+        s"survey_ztsink_${graft.Util.sfTag(d)}.fits")
       val rows = s.range(0, height, 1, 8)
         .select(col("id").as("y"),
           expr("transform(sequence(0, 63), x -> (3 * y + 5 * x + 7) % 251)")
@@ -1099,8 +1092,7 @@ object ScanOps {
       val height = t(s, d, "documents").count()
       val tileRows = 64
       // shares a27's fixture (same planted file — build-once, r8 #7)
-      val path = graft.Util.fixtureOnce(
-        s"survey_ztiled_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("survey_ztiled", d, ".fits")(p =>
         graft.fits.FitsWriter.writeTiledImageFits(p, 64, height, tileRows))
       tiledCutoutFrame(s, path, tileRows, height / 4, height / 2, 16, 48)
         .orderBy("y")
@@ -1137,8 +1129,7 @@ object ScanOps {
       val height = t(s, d, "documents").count()
       val tileRows = 64
       // shares a27/a30's fixture (same planted file — build-once, r8 #7)
-      val path = graft.Util.fixtureOnce(
-        s"survey_ztiled_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("survey_ztiled", d, ".fits")(p =>
         graft.fits.FitsWriter.writeTiledImageFits(p, 64, height, tileRows))
       // the user's sky request: a30's pixel window [h/4, h/2) × [16, 48)
       // EXPRESSED IN WORLD COORDINATES through the planted WCS — what a
@@ -1270,8 +1261,7 @@ object ScanOps {
     (s, d) => {
       val height = t(s, d, "documents").count()
       val tileRows = 64
-      val path = graft.Util.fixtureOnce(
-        s"survey_rot_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("survey_rot", d, ".fits")(p =>
         graft.fits.FitsWriter.writeTiledImageFits(p, 64, height, tileRows,
           graft.fits.FitsWriter.wcsRotCards))
       val (x0, x1, y0, y1) = {
@@ -1339,8 +1329,7 @@ object ScanOps {
     (s, d) => {
       val height = t(s, d, "documents").count()
       val tileRows = 64
-      val path = graft.Util.fixtureOnce(
-        s"survey_tan_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("survey_tan", d, ".fits")(p =>
         graft.fits.FitsWriter.writeTiledImageFits(p, 64, height, tileRows,
           graft.fits.FitsWriter.wcsTanCards))
       val (x0, x1, y0, y1) = {
@@ -1436,8 +1425,7 @@ object ScanOps {
       val h = 64L
       val tileRows = 16 // 4 bands per plane: real per-plane tile geometry
       // build-once scaffolding (r8 #7): the op under test is the READER
-      val path = graft.Util.fixtureOnce(
-        s"cube_ztiled_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("cube_ztiled", d, ".fits")(p =>
         graft.fits.FitsWriter.writeTiledCubeFits(p, 64, h, depth, tileRows))
       val tilesPerPlane = (h + tileRows - 1) / tileRows
       val nTiles = depth * tilesPerPlane
@@ -1594,8 +1582,7 @@ object ScanOps {
       val height = t(s, d, "documents").count() // fixture size, not data
       val tileRows = 64
       // build-once scaffolding (r8 #7): the op under test is the READER
-      val path = graft.Util.fixtureOnce(
-        s"survey_qfloat_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("survey_qfloat", d, ".fits")(p =>
         graft.fits.FitsWriter.writeQuantizedImageFits(p, 64, height, tileRows))
       quantizedImageStats(s, path, (height + tileRows - 1) / tileRows, tileRows)
     },
@@ -1645,8 +1632,7 @@ object ScanOps {
       val height = t(s, d, "documents").count() // fixture size, not data
       val tileRows = 64
       // build-once scaffolding (r8 #7): the op under test is the READER
-      val path = graft.Util.fixtureOnce(
-        s"survey_hcomp_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("survey_hcomp", d, ".fits")(p =>
         graft.fits.FitsWriter.writeQuantizedImageFits(p, 64, height, tileRows,
           "GRAFT_HCOMP_1"))
       quantizedImageStats(s, path, (height + tileRows - 1) / tileRows, tileRows)
@@ -1676,8 +1662,7 @@ object ScanOps {
       val height = t(s, d, "documents").count() // fixture size, not data
       val tileRows = 64
       // build-once scaffolding (r8 #7): the op under test is the READER
-      val path = graft.Util.fixtureOnce(
-        s"survey_mask_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
+      val path = graft.Util.fixtureOnce("survey_mask", d, ".fits")(p =>
         graft.fits.FitsWriter.writeMaskImageFits(p, 64, height, tileRows))
       val nTiles = (height + tileRows - 1) / tileRows
       val splits = tileSplits(nTiles, 64L * tileRows * 2)
@@ -1743,7 +1728,7 @@ object ScanOps {
     (s, d) => {
       // per-sfDir fixture name: same spec-memoization reason as a11
       val fitsPath = graft.Util.scratch(
-        s"emb_xc_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")
+        s"emb_xc_${graft.Util.sfTag(d)}.fits")
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"),
           // 12-bit mask = vec_id % 4096, FITS X packing: bit 1 is the MSB
@@ -1880,8 +1865,7 @@ object ScanOps {
     * r10→r11 a15 cost drift, adjudicated in PERF.md §r12).
     */
   private[graft] def a15FragDir(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"a15_fragmented_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    graft.Util.fixtureOnce("a15_fragmented", d) { dir =>
       t(s, d, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
         .repartition(64).write.mode("overwrite").parquet(dir)
     }
@@ -1938,8 +1922,7 @@ object ScanOps {
     */
   private[graft] def a37BloomDirs(s: SparkSession,
       d: String): (String, String, String) = {
-    val base = graft.Util.fixtureOnce(
-      s"a37_bloom_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { dir =>
+    val base = graft.Util.fixtureOnce("a37_bloom", d) { dir =>
       val li = t(s, d, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_extendedprice")
         .repartition(8, col("l_orderkey")) // key-hashed: a key lives in ONE file
@@ -2200,8 +2183,7 @@ object ScanOps {
   val a40_fits_header_provenance = OpQuery(
     (s, d) => {
       import s.implicits._
-      val path = graft.Util.fixtureOnce(
-        s"a40_prov_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits") { p =>
+      val path = graft.Util.fixtureOnce("a40_prov", d, ".fits") { p =>
         graft.fits.FitsWriter.writeDataFrame(p,
           t(s, d, "nation").orderBy("n_nationkey"),
           strLens = Map("n_name" -> 25),

@@ -23,6 +23,8 @@ object StreamOps {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ops.StreamOps")
+
   /** Scale-adaptive shuffle sizing for the streaming harnesses (opt guide
     * §2: derive partitioning from the data, not from a constant tuned for
     * either local mode or the cluster). A streaming query's stateful
@@ -51,7 +53,9 @@ object StreamOps {
     * (a plain java.io.File reports 0 for hdfs://, s3:// or file: URIs,
     * which would have started a 100 TB cluster stream at width 1);
     * unknown or empty sizes fall back to the cluster's default
-    * parallelism, never to 1.
+    * parallelism, never to 1. A size that cannot be read (unsupported
+    * scheme, permissions, an unreachable store) is logged as a warning
+    * naming the paths and the cause before that fallback.
     */
   private[graft] def withArrivalSizedShuffle[T](s: SparkSession,
       srcPaths: Seq[String])(body: => T): T = {
@@ -62,7 +66,11 @@ object StreamOps {
         val fs = path.getFileSystem(conf)
         if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
       }.sum
-    } catch { case scala.util.control.NonFatal(_) => 0L }
+    } catch { case scala.util.control.NonFatal(e) =>
+      log.warn(s"arrival bytes of ${srcPaths.mkString(", ")} unreadable ($e); " +
+        "sizing the stream shuffle from the default parallelism")
+      0L
+    }
     val dp = s.sparkContext.defaultParallelism.toLong
     val parts =
       if (bytes <= 0L) dp
@@ -538,8 +546,7 @@ object StreamOps {
       // at full batch width BEFORE the arrival-sized window (the
       // j12/j13 statics rule), which also lets the window size itself
       // on the ACTUAL arriving files rather than the whole corpus.
-      val srcDir = graft.Util.fixtureOnce(
-        s"j17_probe_src_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { p =>
+      val srcDir = graft.Util.fixtureOnce("j17_probe_src", d) { p =>
         val probeDocs = docs.filter(col("doc_id") % 10 === 0)
         probeDocs.filter(col("doc_id") % 20 === 0).coalesce(1)
           .write.mode("overwrite").parquet(s"$p/f0")
@@ -583,8 +590,7 @@ object StreamOps {
     * (the j17 convention).
     */
   private def j25SourceDir(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"j25_src_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { p =>
+    graft.Util.fixtureOnce("j25_src", d) { p =>
       val ids = t(s, d, "documents").select("doc_id")
       def stamped(m: Int, day: String) = ids
         .filter(col("doc_id") % 10 === m)
@@ -700,8 +706,7 @@ object StreamOps {
     * probes (%40=20), both two batches behind the advanced watermark.
     */
   private def j26SourceDir(s: SparkSession, d: String): String =
-    graft.Util.fixtureOnce(
-      s"j26_src_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { p =>
+    graft.Util.fixtureOnce("j26_src", d) { p =>
       val docs = t(s, d, "documents")
       val probes = docs.filter(col("doc_id") % 10 === 0)
       def stamped(m: Int, day: String) = probes
@@ -1056,8 +1061,7 @@ object StreamOps {
       graft.Util.deleteRecursively(sink)
       val cust = t(s, d, "customer")
       // build-once scaffolding, keyed per sfDir (r8 #7)
-      val srcDir = graft.Util.fixtureOnce(
-        s"j18_alert_src_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { p =>
+      val srcDir = graft.Util.fixtureOnce("j18_alert_src", d) { p =>
         cust.filter(col("c_custkey") % 2 === 0).coalesce(1)
           .write.mode("overwrite").parquet(s"$p/f0")
         cust.filter(col("c_custkey") % 2 =!= 0).coalesce(1)
@@ -1129,8 +1133,7 @@ object StreamOps {
       graft.Util.deleteRecursively(sink)
       val docs = t(s, d, "documents")
       // build-once scaffolding, keyed per sfDir (r8 #7)
-      val srcDir = graft.Util.fixtureOnce(
-        s"j19_img_src_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { p =>
+      val srcDir = graft.Util.fixtureOnce("j19_img_src", d) { p =>
         docs.filter(col("doc_id") % 4 === 0).coalesce(1)
           .write.mode("overwrite").parquet(s"$p/f0")
         docs.filter(col("doc_id") % 4 === 2).coalesce(1)
@@ -1203,70 +1206,13 @@ object StreamOps {
     */
   val j20_stream_ann = OpQuery(
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val ckpt = new java.io.File(graft.Util.scratch("ckpt_j20"))
-      graft.Util.deleteRecursively(ckpt)
-      val sink = new java.io.File(graft.Util.scratch("j20_sink"))
-      graft.Util.deleteRecursively(sink)
-      val e = t(s, d, "embeddings")
-      // build-once scaffolding, keyed per sfDir (r8 #7): the arriving
-      // queries — two files so AvailableNow runs two real batches
-      val srcDir = graft.Util.fixtureOnce(
-        s"j20_query_src_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { p =>
-        val q = e.filter(col("vec_id") % 101 === 3)
-        q.filter(col("vec_id") % 2 === 0).coalesce(1)
-          .write.mode("overwrite").parquet(s"$p/f0")
-        q.filter(col("vec_id") % 2 === 1).coalesce(1)
-          .write.mode("overwrite").parquet(s"$p/f1")
-      }
-      // the persisted codes-only index (i63's artifact) + the float side
+      // the persisted codes-only index (i63's artifact), every code scanned
       val codes = s.read.parquet(graft.ops.LlmOps.sq8WriteIndex(s, d))
         .localCheckpoint()
-      val src = s.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(srcDir)
-      val q = src.select("vec_id", "embedding").writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // the index-side guard applied to the query stream too
-          val qb = batch
-            .withColumn("maxq", array_max(transform(col("embedding"),
-              x => abs(x.cast("double")))))
-            .filter(col("maxq") > 0)
-            .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-          val approx = codes.join(broadcast(qb), col("vec_id") =!= col("q_id"))
-            .withColumn("approx_sim", col("maxabs") / lit(127.0) *
-              aggregate(zip_with(col("qarr"), col("qvec"),
-                (qc, v) => qc * v.cast("double")), lit(0.0), (a, x) => a + x))
-            .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-              .orderBy(desc("approx_sim"), asc("vec_id"))))
-            .filter(col("rk") <= 50)
-            .select("q_id", "vec_id", "qvec")
-          approx.join(t(s, d, "embeddings"), "vec_id")
-            .withColumn("sim", round(graft.functions.VectorFunctions.dot(
-              col("embedding"), col("qvec")), 6))
-            .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-              .orderBy(desc("sim"), asc("vec_id"))))
-            .filter(col("rk") <= 3)
-            .select("q_id", "vec_id", "sim")
-            .write.mode("append").parquet(sink.getAbsolutePath)
-        }
-        .start()
-      q.awaitTermination()
-      s.read.parquet(sink.getAbsolutePath).orderBy("q_id", "vec_id")
+      streamAnnServe(s, d, "j20", qb => AnnIndex.sq8Probe(codes, qb))
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
-       |c AS (
-       |  SELECT vec_id, embedding, maxabs,
-       |    list_transform(embedding,
-       |      x -> CAST(floor(x::DOUBLE * 127.0 / maxabs + 0.5) AS BIGINT)) AS qarr
-       |  FROM m WHERE maxabs > 0),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
+       |${AnnIndex.sq8Sql("c", "vec_id, embedding, maxabs")},
        |q AS (SELECT vec_id AS q_id, embedding AS qvec FROM c
        |      WHERE vec_id % 101 = 3),
        |a AS (
@@ -1280,144 +1226,7 @@ object StreamOps {
        |s AS (SELECT q_id, vec_id,
        |    round(${graft.ops.LlmOps.dotSql("embedding", "qvec")}, 6) AS sim
        |  FROM r WHERE rk <= 50),
-       |t AS (SELECT q_id, vec_id, sim, row_number() OVER (PARTITION BY q_id
-       |    ORDER BY sim DESC, vec_id) AS rk FROM s)
-       |SELECT q_id, vec_id, sim FROM t WHERE rk <= 3
-       |ORDER BY q_id, vec_id""".stripMargin)
-
-  /** Per-batch stage 1 of the IVF-pruned streaming ANN (j21) — the
-    * composition the j20 Scaladoc promised ("a deployment composes
-    * i64's cell layout so each query prunes to its nprobe partitions"),
-    * made a real per-batch plan (r9 verdict #2):
-    *
-    *  1. rank cells PER QUERY against the PERSISTED k×64 centroid
-    *     artifact (i64's `sq8IvfCentDir` — read per batch, k×64 rows;
-    *     never the float corpus), rounded csim + (q_id) window rank ≤ 2
-    *     — i13's deterministic cut per query;
-    *  2. the batch's cell UNION collects into a literal `IN` (bounded
-    *     by k cells total, the d2/i7 convention) so the codes scan
-    *     plans PartitionFilters — per-batch bytes track the probed
-    *     cells, not the index (StreamOpsSpec plan-asserts this);
-    *  3. each query approx-scores ONLY its own top-2 cells' codes
-    *     (the qcells broadcast join re-restricts the union per query),
-    *     window rank ≤ 50 per q_id.
-    *
-    * Returns (q_id, vec_id, qvec) — the survivors stage 2 re-ranks
-    * exactly. qcells is localCheckpointed: it feeds both the bounded
-    * cell collect and the broadcast join, and the checkpoint keeps the
-    * returned plan's broadcast side a local scan (no recompute).
-    */
-  /** Per-batch cell ranking against a persisted centroid table — stage 0
-    * shared by the SQ8 probe (ivfBatchStage1) and the PQ probe
-    * (pqIvfBatchStage1): rounded csim per (query, cell), window rank ≤
-    * nprobe. Returns (q_id, cell), localCheckpointed because every
-    * caller reads it twice (the bounded cell collect + a broadcast join).
-    */
-  private[graft] def ivfBatchCells(s: SparkSession, centDir: String,
-      qb: DataFrame, nprobe: Int): DataFrame =
-    ivfBatchCells(s.read.parquet(centDir), qb, nprobe)
-
-  /** The frame-accepting form: serving harnesses load the k×64 centroid
-    * artifact ONCE per op (localCheckpointed) and rank every micro-batch
-    * against the held frame instead of re-scanning the parquet per batch
-    * (opt guide §6 redundant I/O — the r14 verdict's #2).
-    */
-  private[graft] def ivfBatchCells(cent: DataFrame,
-      qb: DataFrame, nprobe: Int): DataFrame = {
-    val qx = qb.select(col("q_id"), posexplode(col("qvec")).as(Seq("pos", "qv")))
-      .withColumn("qv", col("qv").cast("double"))
-    cent.join(broadcast(qx), Seq("pos"))
-      .groupBy("q_id", "cell")
-      .agg(round(sum(col("c") * col("qv")), 6).as("csim"))
-      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-        .orderBy(desc("csim"), asc("cell"))))
-      .filter(col("rk") <= nprobe).select("q_id", "cell")
-      .localCheckpoint()
-  }
-
-  def ivfBatchStage1(s: SparkSession, idxDir: String, qb: DataFrame,
-      nprobe: Int = 2, centDir: Option[String] = None,
-      // per-op hoisted side frames (r14 verdict #2): the serving
-      // harnesses pass the once-loaded centroid frame and the shared
-      // lazy index scan handle so a micro-batch re-plans but never
-      // re-loads the statics
-      centDf: Option[DataFrame] = None,
-      idxDf: Option[DataFrame] = None): DataFrame = {
-    // the gate layout keeps centroids at <idx>_cent; PrepMain's --ann
-    // artifact names them ann_centroids.parquet beside the index —
-    // same table, caller-supplied path
-    val qcells = ivfBatchCells(centDf.getOrElse(s.read.parquet(
-      centDir.getOrElse(graft.ops.LlmOps.sq8IvfCentDir(idxDir)))), qb, nprobe)
-    val cells = qcells.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    // a batch whose queries were ALL guard-filtered (maxq == 0) ranks no
-    // cells; isin() with zero arguments is an analyzer edge case, so
-    // return the empty survivor frame directly instead of planning it
-    if (cells.isEmpty)
-      return qb.select(col("q_id"), col("q_id").as("vec_id"), col("qvec"))
-        .limit(0)
-    idxDf.getOrElse(s.read.parquet(idxDir)).filter(col("cell").isin(cells: _*))
-      .join(broadcast(qcells.join(qb, "q_id")), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("approx_sim", col("maxabs") / lit(127.0) *
-        aggregate(zip_with(col("qarr"), col("qvec"),
-          (qc, v) => qc * v.cast("double")), lit(0.0), (a, x) => a + x))
-      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-        .orderBy(desc("approx_sim"), asc("vec_id"))))
-      .filter(col("rk") <= 50)
-      .select("q_id", "vec_id", "qvec")
-  }
-
-  /** Per-batch stage 1 of the IVF×PQ streaming ANN (j23) — ivfBatchStage1
-    * with i71's byte lever swapped in: the SAME per-query cell cut
-    * against the persisted learned centroids (stage 0 shared code), but
-    * the probed partitions hold 8-byte PQ codes ranked by the integer
-    * ADC — per-batch tables (|batch| × m·k rows, broadcast) joined
-    * map-side against the exploded codes of ONLY the probed cells. Per
-    * batch the cluster reads nprobe directories × 8 bytes/vector — both
-    * reductions compound in the SERVING path, where batch cadence
-    * multiplies every byte. Returns (q_id, vec_id, qvec) survivors for
-    * the exact re-rank, the ivfBatchStage1 contract.
-    */
-  def pqIvfBatchStage1(s: SparkSession, idxDir: String, cbDir: String,
-      centDir: String, qb: DataFrame, nprobe: Int = 2,
-      // per-op hoisted side frames (r14 verdict #2) — see ivfBatchStage1
-      centDf: Option[DataFrame] = None,
-      cbDf: Option[DataFrame] = None,
-      idxDf: Option[DataFrame] = None): DataFrame = {
-    import graft.ops.LlmOps.{PqDsub => D}
-    val qcells = ivfBatchCells(
-      centDf.getOrElse(s.read.parquet(centDir)), qb, nprobe)
-    val cells = qcells.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    if (cells.isEmpty)
-      return qb.select(col("q_id"), col("q_id").as("vec_id"), col("qvec"))
-        .limit(0)
-    // per-query integer ADC tables against the constant-size codebook
-    val qx = qb
-      .select(col("q_id"), posexplode(
-        expr("transform(qvec, x -> CAST(floor(x * 1000) AS BIGINT))"))
-        .as(Seq("p0", "qv")))
-      .withColumn("sub", expr(s"p0 DIV $D"))
-      .withColumn("pos", expr(s"p0 % $D"))
-    val dtq = cbDf.getOrElse(s.read.parquet(cbDir))
-      .join(broadcast(qx), Seq("sub", "pos"))
-      .groupBy("q_id", "sub", "cid")
-      .agg(sum(col("cv_i") * col("qv")).as("ds"))
-    idxDf.getOrElse(s.read.parquet(idxDir)).filter(col("cell").isin(cells: _*))
-      .select(col("vec_id"), col("cell"),
-        posexplode(col("codes")).as(Seq("sub", "cid")))
-      .join(broadcast(qcells), Seq("cell")) // each query scores its OWN cells
-      .join(broadcast(dtq), Seq("q_id", "sub", "cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id")
-      .agg(sum("ds").as("approx_i"))
-      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-        .orderBy(desc("approx_i"), asc("vec_id"))))
-      .filter(col("rk") <= 50)
-      .join(broadcast(qb.select("q_id", "qvec")), Seq("q_id"))
-      .select("q_id", "vec_id", "qvec")
-  }
+       |${AnnIndex.top3Sql("t", "s")}""".stripMargin)
 
   /** j21: IVF-pruned streaming ANN serving — j20 composed with i64's
     * cell layout, closing the r9 verdict's #2: where j20 honestly scans
@@ -1432,34 +1241,13 @@ object StreamOps {
     * (rounded csim, row_number ≤ 2) — recall loss vs the flat scan is
     * the documented IVF trade, and the gate hashes the PRUNED truth.
     */
-  /** The j21/j22 serving harness, parametrized by WHICH persisted index
-    * the batches probe (label cells vs learned k-means cells — the plan
-    * is identical either way; only the artifact differs, which is the
-    * i67 comparison made a SERVING path): two AvailableNow micro-batches
-    * of arriving queries, per-batch cell rank against the index's
-    * persisted centroids, literal-IN partition-filtered probe, exact
-    * top-3 re-rank appended to the sink.
+  /** The serving harness behind j20–j24/j27, parametrized by the
+    * per-batch stage-1 probe: two AvailableNow micro-batches of arriving
+    * queries (the guard-filtered planted set), stage 1 returns
+    * (q_id, vec_id, qvec) survivors, the exact top-3 re-rank per query is
+    * appended to the sink.
     */
   private def streamAnnServe(s: SparkSession, d: String, name: String,
-      idx: String): DataFrame = {
-    // statics loaded once per op, not once per micro-batch (r14 verdict
-    // #2 / opt guide §6): the k×64 centroid artifact is materialized
-    // (localCheckpoint — removes one parquet scan job per batch), the
-    // index keeps ONE lazy scan handle (file listing resolved once; the
-    // per-batch literal cell partition filter plans exactly as before)
-    val cent = s.read.parquet(graft.ops.LlmOps.sq8IvfCentDir(idx))
-      .localCheckpoint()
-    val idxDf = s.read.parquet(idx)
-    streamAnnServeWith(s, d, name, qb =>
-      ivfBatchStage1(s, idx, qb, centDf = Some(cent), idxDf = Some(idxDf)))
-  }
-
-  /** The harness behind streamAnnServe, parametrized by the per-batch
-    * stage-1 probe (SQ8 for j21/j22, PQ ADC for j23) — the sink/rerank
-    * contract is identical: stage 1 returns (q_id, vec_id, qvec), the
-    * harness re-ranks exactly and appends the top-3 per query.
-    */
-  private def streamAnnServeWith(s: SparkSession, d: String, name: String,
       stage1: DataFrame => DataFrame): DataFrame = {
     val ckpt = new java.io.File(graft.Util.scratch(s"ckpt_$name"))
     graft.Util.deleteRecursively(ckpt)
@@ -1469,8 +1257,7 @@ object StreamOps {
     // build-once scaffolding, keyed per sfDir (r8 #7): the arriving
     // queries — two files so AvailableNow runs two real batches (the
     // fixture is shared across serving keys: same arriving queries)
-    val srcDir = graft.Util.fixtureOnce(
-      s"j21_query_src_${d.replaceAll("[^a-zA-Z0-9]", "_")}") { p =>
+    val srcDir = graft.Util.fixtureOnce("j21_query_src", d) { p =>
       val q = e.filter(col("vec_id") % 101 === 3)
       q.filter(col("vec_id") % 2 === 0).coalesce(1)
         .write.mode("overwrite").parquet(s"$p/f0")
@@ -1487,20 +1274,9 @@ object StreamOps {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // the index-side guard applied to the query stream too
-        val qb = batch
-          .withColumn("maxq", array_max(transform(col("embedding"),
-            x => abs(x.cast("double")))))
-          .filter(col("maxq") > 0)
-          .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
+        val qb = AnnIndex.queries(AnnIndex.kept(batch))
           .localCheckpoint() // read by the cell rank AND the probe join
-        val approx = stage1(qb)
-        approx.join(t(s, d, "embeddings"), "vec_id")
-          .withColumn("sim", round(graft.functions.VectorFunctions.dot(
-            col("embedding"), col("qvec")), 6))
-          .withColumn("rk", row_number().over(Window.partitionBy("q_id")
-            .orderBy(desc("sim"), asc("vec_id"))))
-          .filter(col("rk") <= 3)
-          .select("q_id", "vec_id", "sim")
+        AnnIndex.rerank(stage1(qb), t(s, d, "embeddings"), 3)
           .write.mode("append").parquet(sink.getAbsolutePath)
       }
       .start()
@@ -1508,46 +1284,51 @@ object StreamOps {
     s.read.parquet(sink.getAbsolutePath).orderBy("q_id", "vec_id")
   }
 
+  /** SQ8 serving over a cell-partitioned index (j21 label cells, j22
+    * learned cells — the plan is identical either way; only the artifact
+    * differs, which is the i67 comparison made a SERVING path). Statics
+    * are loaded once per op, not once per micro-batch (r14 verdict #2 /
+    * opt guide §6): the k×64 centroid artifact is materialized, the index
+    * keeps ONE lazy scan handle (file listing resolved once; the
+    * per-batch literal cell partition filter plans exactly as before).
+    */
+  private def sq8Serve(s: SparkSession, d: String, name: String,
+      idx: String): DataFrame = {
+    val cent = s.read.parquet(AnnIndex.centDir(idx)).localCheckpoint()
+    val codes = s.read.parquet(idx)
+    streamAnnServe(s, d, name, qb => AnnIndex.sq8Probe(codes, qb, Some(cent)))
+  }
+
+  /** PQ ADC serving over a codes table partitioned by the learned
+    * k-means cells (j23 raw codes with `pqIdx`'s flat codebook; j24/j27
+    * residual codes with their own), statics held across batches as in
+    * `sq8Serve`; `tombstones` (j27) is the deletion log.
+    */
+  private def adcServe(s: SparkSession, d: String, name: String, idx: String,
+      cbIdx: String, residual: Boolean,
+      tombstones: Option[DataFrame] = None): DataFrame = {
+    val cent = s.read.parquet(AnnIndex.centDir(
+      graft.ops.LlmOps.sq8WriteIndexKmeans(s, d))).localCheckpoint()
+    val cb = s.read.parquet(AnnIndex.cbDir(cbIdx)).localCheckpoint()
+    val codes = s.read.parquet(idx)
+    streamAnnServe(s, d, name, qb => AnnIndex.adcProbe(codes, cb, qb,
+      Some(cent), residual = residual, tombstones = tombstones))
+  }
+
   val j21_stream_ann_ivf = OpQuery(
-    (s, d) => streamAnnServe(s, d, "j21", graft.ops.LlmOps.sq8WriteIndexIvf(s, d)),
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
-       |c AS (
-       |  SELECT vec_id, label, embedding, maxabs,
-       |    list_transform(embedding,
-       |      x -> CAST(floor(x::DOUBLE * 127.0 / maxabs + 0.5) AS BIGINT)) AS qarr
-       |  FROM m WHERE maxabs > 0),
+    (s, d) => sq8Serve(s, d, "j21", graft.ops.LlmOps.sq8WriteIndexIvf(s, d)),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
+       |${AnnIndex.sq8Sql("c", "vec_id, label, embedding, maxabs")},
        |ex AS (SELECT label, r.i AS pos, embedding[r.i]::DOUBLE AS v
        |       FROM embeddings, range(1,65) r(i)),
        |cent AS (SELECT label, pos, avg(v) AS c FROM ex GROUP BY 1, 2),
        |q AS (SELECT vec_id AS q_id, embedding AS qvec FROM c
        |      WHERE vec_id % 101 = 3),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM q, range(1,65) r(i)),
-       |csim AS (SELECT q_id, cent.label, round(sum(c * qv), 6) AS s
-       |         FROM cent JOIN qx USING (pos) GROUP BY 1, 2),
-       |qc AS (SELECT q_id, label FROM (
-       |         SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csim) WHERE rk <= 2),
-       |a AS (
-       |  SELECT q.q_id, c.vec_id, c.embedding, q.qvec,
-       |    maxabs / 127.0 * list_sum(list_transform(range(1,65),
-       |      k -> c.qarr[k] * q.qvec[k]::DOUBLE)) AS approx_sim
-       |  FROM c JOIN qc ON c.label = qc.label
-       |         JOIN q ON q.q_id = qc.q_id
-       |  WHERE c.vec_id <> q.q_id),
-       |r AS (SELECT q_id, vec_id, embedding, qvec,
-       |    row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_sim DESC, vec_id) AS rk FROM a),
-       |s AS (SELECT q_id, vec_id,
-       |    round(${graft.ops.LlmOps.dotSql("embedding", "qvec")}, 6) AS sim
-       |  FROM r WHERE rk <= 50),
-       |t AS (SELECT q_id, vec_id, sim, row_number() OVER (PARTITION BY q_id
-       |    ORDER BY sim DESC, vec_id) AS rk FROM s)
-       |SELECT q_id, vec_id, sim FROM t WHERE rk <= 3
-       |ORDER BY q_id, vec_id""".stripMargin)
+       |${AnnIndex.qxSql("q")},
+       |${AnnIndex.csimSql("csim", "cent")},
+       |${AnnIndex.qcSql("qc", "csim", 2)},
+       |${AnnIndex.sq8ChainSql("a", "r", "s", "q", "qc", "label", np = false)},
+       |${AnnIndex.top3Sql("t", "s")}""".stripMargin)
 
   /** j22: serving the LEARNED index — j21's per-batch IVF-pruned plan
     * run against `sq8WriteIndexKmeans`'s artifact (r11: i67 proves the
@@ -1562,44 +1343,17 @@ object StreamOps {
     * truth per arriving query.
     */
   val j22_stream_ann_kmeans = OpQuery(
-    (s, d) => streamAnnServe(s, d, "j22",
-      graft.ops.LlmOps.sq8WriteIndexKmeans(s, d)),
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    (s, d) => sq8Serve(s, d, "j22", graft.ops.LlmOps.sq8WriteIndexKmeans(s, d)),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${graft.ops.LlmOps.lloydCteSql("maxabs > 0")},
-       |c AS (
-       |  SELECT m.vec_id, k.cid AS cell, m.embedding, m.maxabs,
-       |    list_transform(m.embedding,
-       |      x -> CAST(floor(x::DOUBLE * 127.0 / maxabs + 0.5) AS BIGINT)) AS qarr
-       |  FROM m JOIN cellkm k ON m.vec_id = k.vec_id WHERE m.maxabs > 0),
+       |${AnnIndex.kmSq8Sql("cell")},
        |q AS (SELECT vec_id AS q_id, embedding AS qvec FROM c
        |      WHERE vec_id % 101 = 3),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM q, range(1,65) r(i)),
-       |csim AS (SELECT q_id, centkm.label, round(sum(c * qv), 6) AS s
-       |         FROM centkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qc AS (SELECT q_id, label FROM (
-       |         SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csim) WHERE rk <= 2),
-       |a AS (
-       |  SELECT q.q_id, c.vec_id, c.embedding, q.qvec,
-       |    maxabs / 127.0 * list_sum(list_transform(range(1,65),
-       |      k -> c.qarr[k] * q.qvec[k]::DOUBLE)) AS approx_sim
-       |  FROM c JOIN qc ON c.cell = qc.label
-       |         JOIN q ON q.q_id = qc.q_id
-       |  WHERE c.vec_id <> q.q_id),
-       |r AS (SELECT q_id, vec_id, embedding, qvec,
-       |    row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_sim DESC, vec_id) AS rk FROM a),
-       |s AS (SELECT q_id, vec_id,
-       |    round(${graft.ops.LlmOps.dotSql("embedding", "qvec")}, 6) AS sim
-       |  FROM r WHERE rk <= 50),
-       |t AS (SELECT q_id, vec_id, sim, row_number() OVER (PARTITION BY q_id
-       |    ORDER BY sim DESC, vec_id) AS rk FROM s)
-       |SELECT q_id, vec_id, sim FROM t WHERE rk <= 3
-       |ORDER BY q_id, vec_id""".stripMargin)
+       |${AnnIndex.qxSql("q")},
+       |${AnnIndex.csimSql("csim", "centkm")},
+       |${AnnIndex.qcSql("qc", "csim", 2)},
+       |${AnnIndex.sq8ChainSql("a", "r", "s", "q", "qc", "cell", np = false)},
+       |${AnnIndex.top3Sql("t", "s")}""".stripMargin)
 
   /** j23: IVF×PQ streaming serving — i71's index behind the SAME
     * harness as j21/j22 (one sink/rerank contract, three stage-1
@@ -1628,63 +1382,14 @@ object StreamOps {
   val j24_stream_ann_rivfpq = OpQuery(
     (s, d) => {
       val idx = graft.ops.LlmOps.pqrWriteIndex(s, d)
-      val cent = graft.ops.LlmOps.sq8IvfCentDir(
-        graft.ops.LlmOps.sq8WriteIndexKmeans(s, d))
-      // statics once per op (r14 verdict #2): centroid + codebook
-      // frames held across batches, one lazy index scan handle
-      val centDf = s.read.parquet(cent).localCheckpoint()
-      val cbDf = s.read.parquet(graft.ops.LlmOps.pqrCbDir(idx))
-        .localCheckpoint()
-      val idxDf = s.read.parquet(idx)
-      streamAnnServeWith(s, d, "j24", qb =>
-        graft.ops.LlmOps.pqrBatchTop(s, idx, cent,
-            qb.withColumn("qq",
-              expr("transform(qvec, x -> CAST(floor(x * 1000) AS BIGINT))")),
-            50, centDf = Some(centDf), cbDf = Some(cbDf),
-            idxDf = Some(idxDf))
-          .join(broadcast(qb), Seq("q_id"))
-          .select("q_id", "vec_id", "qvec"))
+      adcServe(s, d, "j24", idx, idx, residual = true)
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${graft.ops.LlmOps.lloydCteSql("maxabs > 0")},
        |${graft.ops.LlmOps.pqrCteSql},
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM m WHERE vec_id % 101 = 3 AND maxabs > 0),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
-       |csim AS (SELECT q_id, centkm.label, round(sum(c * qv), 6) AS s
-       |         FROM centkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qc AS (SELECT q_id, label FROM (
-       |         SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csim) WHERE rk <= 2),
-       |rdtq AS (SELECT qs.q_id, rm1.sub, rm1.cid,
-       |          sum(qs.qq[rm1.sub * ${graft.ops.LlmOps.PqDsub} + rm1.pos] * rm1.cv_i) AS ds
-       |        FROM rm1, qs GROUP BY 1, 2, 3),
-       |cdtq AS (SELECT qs.q_id, c1.cid AS cell,
-       |          list_sum(list_transform(range(1, len(c1.cv) + 1),
-       |            i -> qs.qq[i] * c1.cv[i])) AS cd
-       |        FROM c1, qs),
-       |apr AS (SELECT rdtq.q_id, rcd.vec_id, cdtq.cd + sum(rdtq.ds) AS approx_i
-       |        FROM rcd JOIN rdtq ON rcd.sub = rdtq.sub AND rcd.cid = rdtq.cid
-       |             JOIN cellkm ON cellkm.vec_id = rcd.vec_id
-       |             JOIN qc ON qc.q_id = rdtq.q_id AND qc.label = cellkm.cid
-       |             JOIN cdtq ON cdtq.q_id = rdtq.q_id AND cdtq.cell = cellkm.cid
-       |        WHERE rcd.vec_id <> rdtq.q_id
-       |        GROUP BY rdtq.q_id, rcd.vec_id, cdtq.cd),
-       |pr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_i DESC, vec_id) AS rk FROM apr) WHERE rk <= 50),
-       |s2 AS (SELECT pr.q_id, pr.vec_id,
-       |         round(${graft.ops.LlmOps.dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM pr JOIN embeddings e USING (vec_id) JOIN qs USING (q_id)),
-       |t2 AS (SELECT q_id, vec_id, sim, row_number() OVER (PARTITION BY q_id
-       |    ORDER BY sim DESC, vec_id) AS rk FROM s2)
-       |SELECT q_id, vec_id, sim FROM t2 WHERE rk <= 3
-       |ORDER BY q_id, vec_id""".stripMargin)
+       |${AnnIndex.qsSql("m WHERE vec_id % 101 = 3 AND maxabs > 0")},
+       |${AnnIndex.residualBatchSql()},
+       |${AnnIndex.adcServeSql("apr")}""".stripMargin)
 
   /** j27: residual serving WITH the delete path — the r13 verdict #3's
     * serving tier: i84 gave the production index its tombstones in
@@ -1693,7 +1398,7 @@ object StreamOps {
     * queryable exactly where it matters. Same micro-batch chain as j24
     * with the tombstone side table (loaded once, broadcast, captured by
     * the closure — never re-read per batch) anti-joined out of the
-    * codes scan BEFORE the rank window (pqrBatchTop's tombstones hook;
+    * codes scan BEFORE the rank window (AnnIndex.adcProbe's tombstones hook;
     * filtering after the cut returns short exactly when a deleted
     * vector ranked high — the i73/i74 rule). At 100 TB the log is
     * i74's small side table (a bloom filter once it grows) and the
@@ -1704,116 +1409,36 @@ object StreamOps {
   val j27_stream_ann_rivfpq_tomb = OpQuery(
     (s, d) => {
       val idx = graft.ops.LlmOps.pqrWriteIndex(s, d)
-      val cent = graft.ops.LlmOps.sq8IvfCentDir(
-        graft.ops.LlmOps.sq8WriteIndexKmeans(s, d))
       val tomb = t(s, d, "embeddings")
         .filter(col("vec_id") % 13 === 2).select("vec_id")
         .localCheckpoint() // the deletion log: loaded once, not per batch
-      // statics once per op (r14 verdict #2), same shape as j24
-      val centDf = s.read.parquet(cent).localCheckpoint()
-      val cbDf = s.read.parquet(graft.ops.LlmOps.pqrCbDir(idx))
-        .localCheckpoint()
-      val idxDf = s.read.parquet(idx)
-      streamAnnServeWith(s, d, "j27", qb =>
-        graft.ops.LlmOps.pqrBatchTop(s, idx, cent,
-            qb.withColumn("qq",
-              expr("transform(qvec, x -> CAST(floor(x * 1000) AS BIGINT))")),
-            50, tombstones = Some(tomb), centDf = Some(centDf),
-            cbDf = Some(cbDf), idxDf = Some(idxDf))
-          .join(broadcast(qb), Seq("q_id"))
-          .select("q_id", "vec_id", "qvec"))
+      adcServe(s, d, "j27", idx, idx, residual = true, Some(tomb))
     },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${graft.ops.LlmOps.lloydCteSql("maxabs > 0")},
        |${graft.ops.LlmOps.pqrCteSql},
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM m WHERE vec_id % 101 = 3 AND maxabs > 0),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
-       |csim AS (SELECT q_id, centkm.label, round(sum(c * qv), 6) AS s
-       |         FROM centkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qc AS (SELECT q_id, label FROM (
-       |         SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csim) WHERE rk <= 2),
-       |rdtq AS (SELECT qs.q_id, rm1.sub, rm1.cid,
-       |          sum(qs.qq[rm1.sub * ${graft.ops.LlmOps.PqDsub} + rm1.pos] * rm1.cv_i) AS ds
-       |        FROM rm1, qs GROUP BY 1, 2, 3),
-       |cdtq AS (SELECT qs.q_id, c1.cid AS cell,
-       |          list_sum(list_transform(range(1, len(c1.cv) + 1),
-       |            i -> qs.qq[i] * c1.cv[i])) AS cd
-       |        FROM c1, qs),
-       |apr AS (SELECT rdtq.q_id, rcd.vec_id, cdtq.cd + sum(rdtq.ds) AS approx_i
-       |        FROM rcd JOIN rdtq ON rcd.sub = rdtq.sub AND rcd.cid = rdtq.cid
-       |             JOIN cellkm ON cellkm.vec_id = rcd.vec_id
-       |             JOIN qc ON qc.q_id = rdtq.q_id AND qc.label = cellkm.cid
-       |             JOIN cdtq ON cdtq.q_id = rdtq.q_id AND cdtq.cell = cellkm.cid
-       |        WHERE rcd.vec_id <> rdtq.q_id AND rcd.vec_id % 13 <> 2
-       |        GROUP BY rdtq.q_id, rcd.vec_id, cdtq.cd),
-       |pr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_i DESC, vec_id) AS rk FROM apr) WHERE rk <= 50),
-       |s2 AS (SELECT pr.q_id, pr.vec_id,
-       |         round(${graft.ops.LlmOps.dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM pr JOIN embeddings e USING (vec_id) JOIN qs USING (q_id)),
-       |t2 AS (SELECT q_id, vec_id, sim, row_number() OVER (PARTITION BY q_id
-       |    ORDER BY sim DESC, vec_id) AS rk FROM s2)
-       |SELECT q_id, vec_id, sim FROM t2 WHERE rk <= 3
-       |ORDER BY q_id, vec_id""".stripMargin)
+       |${AnnIndex.qsSql("m WHERE vec_id % 101 = 3 AND maxabs > 0")},
+       |${AnnIndex.residualBatchSql(" AND rcd.vec_id % 13 <> 2")},
+       |${AnnIndex.adcServeSql("apr")}""".stripMargin)
 
   val j23_stream_ann_ivfpq = OpQuery(
-    (s, d) => {
-      val idx = graft.ops.LlmOps.pqIvfWriteIndex(s, d)
-      val cb = graft.ops.LlmOps.pqCbDir(graft.ops.LlmOps.pqWriteIndex(s, d))
-      val cent = graft.ops.LlmOps.sq8IvfCentDir(
-        graft.ops.LlmOps.sq8WriteIndexKmeans(s, d))
-      // statics once per op (r14 verdict #2): centroid + codebook
-      // frames held across batches, one lazy index scan handle
-      val centDf = s.read.parquet(cent).localCheckpoint()
-      val cbDf = s.read.parquet(cb).localCheckpoint()
-      val idxDf = s.read.parquet(idx)
-      streamAnnServeWith(s, d, "j23",
-        qb => pqIvfBatchStage1(s, idx, cb, cent, qb,
-          centDf = Some(centDf), cbDf = Some(cbDf), idxDf = Some(idxDf)))
-    },
-    s"""WITH m AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-       |  FROM embeddings),
+    (s, d) => adcServe(s, d, "j23", graft.ops.LlmOps.pqIvfWriteIndex(s, d),
+      graft.ops.LlmOps.pqWriteIndex(s, d), residual = false),
+    s"""WITH ${AnnIndex.mSql("vec_id, label, embedding")},
        |${graft.ops.LlmOps.lloydCteSql("maxabs > 0")},
        |${graft.ops.LlmOps.pqCteSql},
-       |qs AS (SELECT vec_id AS q_id, embedding AS qvec,
-       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS qq
-       |       FROM m WHERE vec_id % 101 = 3 AND maxabs > 0),
-       |qx AS (SELECT q_id, r.i AS pos, qvec[r.i]::DOUBLE AS qv
-       |       FROM qs, range(1,65) r(i)),
-       |csim AS (SELECT q_id, centkm.label, round(sum(c * qv), 6) AS s
-       |         FROM centkm JOIN qx USING (pos) GROUP BY 1, 2),
-       |qc AS (SELECT q_id, label FROM (
-       |         SELECT q_id, label, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY s DESC, label) AS rk FROM csim) WHERE rk <= 2),
-       |dtq AS (SELECT qs.q_id, pm1.sub, pm1.cid,
-       |          sum(qs.qq[pm1.sub * ${graft.ops.LlmOps.PqDsub} + pm1.pos] * pm1.cv_i) AS ds
-       |        FROM pm1, qs GROUP BY 1, 2, 3),
+       |${AnnIndex.qsSql("m WHERE vec_id % 101 = 3 AND maxabs > 0")},
+       |${AnnIndex.qxSql("qs")},
+       |${AnnIndex.csimSql("csim", "centkm")},
+       |${AnnIndex.qcSql("qc", "csim", 2)},
+       |${AnnIndex.dtqSql("dtq", "pm1", "qs", "qq")},
        |ap AS (SELECT dtq.q_id, cd.vec_id, sum(dtq.ds) AS approx_i
        |       FROM cd JOIN dtq ON cd.sub = dtq.sub AND cd.cid = dtq.cid
        |            JOIN cellkm ON cellkm.vec_id = cd.vec_id
        |            JOIN qc ON qc.q_id = dtq.q_id AND qc.label = cellkm.cid
        |       WHERE cd.vec_id <> dtq.q_id
        |       GROUP BY 1, 2),
-       |pr AS (SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY approx_i DESC, vec_id) AS rk FROM ap) WHERE rk <= 50),
-       |s2 AS (SELECT pr.q_id, pr.vec_id,
-       |         round(${graft.ops.LlmOps.dotSql("e.embedding", "qs.qvec")}, 6) AS sim
-       |       FROM pr JOIN embeddings e USING (vec_id) JOIN qs USING (q_id)),
-       |t2 AS (SELECT q_id, vec_id, sim, row_number() OVER (PARTITION BY q_id
-       |    ORDER BY sim DESC, vec_id) AS rk FROM s2)
-       |SELECT q_id, vec_id, sim FROM t2 WHERE rk <= 3
-       |ORDER BY q_id, vec_id""".stripMargin)
+       |${AnnIndex.adcServeSql("ap")}""".stripMargin)
 
   val all: Map[String, OpQuery] = Map(
     "j23_stream_ann_ivfpq" -> j23_stream_ann_ivfpq,

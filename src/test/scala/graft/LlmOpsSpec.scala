@@ -1296,7 +1296,7 @@ class LlmOpsSpec extends SparkTestBase {
     val top = LlmOps.codesTopK(
       spark.read.parquet(idx).filter(col("cell").isin(top2: _*))
         .join(broadcast(tomb), Seq("vec_id"), "left_anti"),
-      LlmOps.adcLitFrom(spark, LlmOps.pqrCbDir(idx), qq, LlmOps.PqrK),
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(idx), qq, LlmOps.PqrK),
       50, 7L, LlmOps.PqrK,
       cellTerm = element_at(typedLit(LlmOps.cellDotMap(spark, kmIdx, qq,
         top2)), col("cell")))
@@ -1370,7 +1370,7 @@ class LlmOpsSpec extends SparkTestBase {
   test("i67: the learned index's artifacts cover identical cells and the build is deterministic") {
     val idx = LlmOps.sq8WriteIndexKmeans(spark, sfDir)
     val codes = spark.read.parquet(idx)
-    val cent = spark.read.parquet(LlmOps.sq8IvfCentDir(idx))
+    val cent = spark.read.parquet(graft.ops.AnnIndex.centDir(idx))
     val codeCells = codes.select("cell").distinct().collect()
       .map(_.getInt(0)).toSet
     val centCells = cent.select("cell").distinct().collect()
@@ -1399,7 +1399,7 @@ class LlmOpsSpec extends SparkTestBase {
     // the codebook is constant-size index metadata: PqM subspaces, at
     // most PqK codewords each, every codeword all PqDsub positions —
     // the property that makes the driver-side ADC build bounded
-    val cb = spark.read.parquet(LlmOps.pqCbDir(idx))
+    val cb = spark.read.parquet(graft.ops.AnnIndex.cbDir(idx))
     val cells = cb.groupBy("sub", "cid").count().collect()
     assert(cells.forall(_.getLong(2) == LlmOps.PqDsub.toLong),
       "a codeword is missing positions")
@@ -1415,13 +1415,13 @@ class LlmOpsSpec extends SparkTestBase {
     val idx = LlmOps.pqWriteIndex(spark, sfDir)
     val codes = spark.read.parquet(idx)
     val qq = LlmOps.pqQueryGrid(spark, sfDir, 7L)
-    val fast = LlmOps.pqCodesTop(codes,
-      LlmOps.pqAdcLit(spark, idx, qq), 50, 7L)
+    val fast = LlmOps.codesTopK(codes,
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(idx), qq, LlmOps.PqK), 50, 7L, LlmOps.PqK)
       .collect().map(_.getLong(0)).toSeq
     // the same ranking spelled as joins: codes exploded against the
     // codebook-derived per-(sub, cid) integer dots — slower, but with
     // no driver-side table build to trust
-    val dt = spark.read.parquet(LlmOps.pqCbDir(idx))
+    val dt = spark.read.parquet(graft.ops.AnnIndex.cbDir(idx))
       .groupBy("sub", "cid")
       .agg(sum(col("cv_i") * element_at(typedLit(qq.toSeq),
         col("sub") * LlmOps.PqDsub + col("pos") + 1)).as("ds"))
@@ -1493,16 +1493,14 @@ class LlmOpsSpec extends SparkTestBase {
     val idx = LlmOps.pqWriteIndex(spark, sfDir)
     val codes = spark.read.parquet(idx)
     val qq = LlmOps.pqQueryGrid(spark, sfDir, 7L)
-    val single = LlmOps.pqCodesTop(codes,
-      LlmOps.pqAdcLit(spark, idx, qq), 50, 7L)
+    val single = LlmOps.codesTopK(codes,
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(idx), qq, LlmOps.PqK), 50, 7L, LlmOps.PqK)
       .collect().map(_.getLong(0)).toSeq
     val qb = Tables.t(spark, sfDir, "embeddings")
       .filter(col("vec_id") === 7)
-      .select(col("vec_id").as("q_id"),
-        expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))")
-          .as("qq"))
-    val batched = LlmOps.pqBatchTop(codes,
-      spark.read.parquet(LlmOps.pqCbDir(idx)), qb, 50)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
+    val batched = graft.ops.AnnIndex.adcProbe(codes,
+      spark.read.parquet(graft.ops.AnnIndex.cbDir(idx)), qb)
       .orderBy("vec_id").collect().map(_.getLong(1)).toSeq
     assert(single.sorted == batched, "batched ADC diverges from the flat-lookup probe")
   }
@@ -1541,24 +1539,24 @@ class LlmOpsSpec extends SparkTestBase {
     // the exclusion must bite: the UNFILTERED approx pool contains
     // tombstoned ids on this fixture (otherwise the test is vacuous)
     val idx = LlmOps.pqWriteIndex(spark, sfDir)
-    val pool = LlmOps.pqCodesTop(spark.read.parquet(idx),
-      LlmOps.pqAdcLit(spark, idx, LlmOps.pqQueryGrid(spark, sfDir, 7L)),
-      50, 7L).collect().map(_.getLong(0))
+    val pool = LlmOps.codesTopK(spark.read.parquet(idx),
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(idx), LlmOps.pqQueryGrid(spark, sfDir, 7L), LlmOps.PqK),
+      50, 7L, LlmOps.PqK).collect().map(_.getLong(0))
     assert(pool.exists(_ % 13 == 2),
       "fixture vacuous: no tombstoned id ranks in the unfiltered pool")
     // live results = i69's chain re-run on the tombstone-free pool:
     // the delete is a PROBE-side exclusion, the artifact is untouched
-    val live = LlmOps.pqCodesTop(
+    val live = LlmOps.codesTopK(
       spark.read.parquet(idx).filter(col("vec_id") % 13 =!= 2),
-      LlmOps.pqAdcLit(spark, idx, LlmOps.pqQueryGrid(spark, sfDir, 7L)),
-      50, 7L).collect().map(_.getLong(0)).toSeq
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(idx), LlmOps.pqQueryGrid(spark, sfDir, 7L), LlmOps.PqK),
+      50, 7L, LlmOps.PqK).collect().map(_.getLong(0)).toSeq
     val antiJoined = spark.read.parquet(idx)
       .join(broadcast(Tables.t(spark, sfDir, "embeddings")
         .filter(col("vec_id") % 13 === 2).select("vec_id")),
         Seq("vec_id"), "left_anti")
-    val viaAnti = LlmOps.pqCodesTop(antiJoined,
-      LlmOps.pqAdcLit(spark, idx, LlmOps.pqQueryGrid(spark, sfDir, 7L)),
-      50, 7L).collect().map(_.getLong(0)).toSeq
+    val viaAnti = LlmOps.codesTopK(antiJoined,
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(idx), LlmOps.pqQueryGrid(spark, sfDir, 7L), LlmOps.PqK),
+      50, 7L, LlmOps.PqK).collect().map(_.getLong(0)).toSeq
     assert(live == viaAnti, "anti-join exclusion diverges from the predicate form")
   }
 
@@ -1590,7 +1588,7 @@ class LlmOpsSpec extends SparkTestBase {
       .withColumn("maxabs", LlmOps.sqMaxAbs).filter(col("maxabs") > 0)
     val (_, m1) = graft.ops.CorpusOps.lloydModel(kept, 10)
     val truth = m1.collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val recovered = LlmOps.kmCentIntArrays(spark, kmIdx).collect()
+    val recovered = LlmOps.kmCentIntArrays(spark, graft.ops.AnnIndex.centDir(kmIdx)).collect()
       .flatMap(r => r.getSeq[Long](1).zipWithIndex.map { case (v, p) =>
         (r.getInt(0).toLong, p) -> v })
     // restrict to live cells (the artifact drops collapsed ones)
@@ -1714,8 +1712,9 @@ class LlmOpsSpec extends SparkTestBase {
         perm = permOpt)
       val qb = permOpt.fold(qb0.withColumn("qqo", col("qq")))(p =>
         qb0.withColumn("qqo", array(p.map(i => col("qq").getItem(i)): _*)))
-      val top = LlmOps.pqrBatchTop(spark, dir, centDir, qb, 50,
-        cbDirOpt = Some(cb), adcGridCol = "qqo")
+      val top = graft.ops.AnnIndex.adcProbe(spark.read.parquet(dir),
+        spark.read.parquet(cb), qb, Some(spark.read.parquet(centDir)),
+        residual = true, perm = permOpt).select("q_id", "vec_id")
       val pruned = top.join(emb, "vec_id")
         .join(broadcast(qb0.select("q_id", "qvec")), "q_id")
         .withColumn("sim", round(graft.functions.VectorFunctions.dot(
@@ -1751,7 +1750,7 @@ class LlmOpsSpec extends SparkTestBase {
     // finer than the k=10 model, every kept vector in exactly one cell
     val idx20 = LlmOps.sq8WriteIndexKmeans20(spark, sfDir)
     val codes = spark.read.parquet(idx20)
-    val cent = spark.read.parquet(LlmOps.sq8IvfCentDir(idx20))
+    val cent = spark.read.parquet(graft.ops.AnnIndex.centDir(idx20))
     val codeCells = codes.select("cell").distinct().collect()
       .map(_.getInt(0)).toSet
     val centCells = cent.select("cell").distinct().collect()
@@ -1810,17 +1809,17 @@ class LlmOpsSpec extends SparkTestBase {
     // exactly what (base + full tombstones) returns — i74's guarantee
     // survives compaction. Remaining tombstones = those in clean cells.
     val qq = LlmOps.pqQueryGrid(spark, sfDir, 7L)
-    val adc = LlmOps.pqAdcLit(spark, LlmOps.pqWriteIndex(spark, sfDir), qq)
+    val adc = LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(LlmOps.pqWriteIndex(spark, sfDir)), qq, LlmOps.PqK)
     val remaining = tomb.join(
       spark.read.parquet(base).select("vec_id"), Seq("vec_id"), "left_semi")
-    val viaCompacted = LlmOps.pqCodesTop(
+    val viaCompacted = LlmOps.codesTopK(
       spark.read.parquet(base)
         .join(broadcast(remaining), Seq("vec_id"), "left_anti"),
-      adc, 50, 7L).collect().map(_.getLong(0)).toSeq
-    val viaBase = LlmOps.pqCodesTop(
+      adc, 50, 7L, LlmOps.PqK).collect().map(_.getLong(0)).toSeq
+    val viaBase = LlmOps.codesTopK(
       spark.read.parquet(LlmOps.pqIvfWriteIndex(spark, sfDir))
         .join(broadcast(tomb), Seq("vec_id"), "left_anti"),
-      adc, 50, 7L).collect().map(_.getLong(0)).toSeq
+      adc, 50, 7L, LlmOps.PqK).collect().map(_.getLong(0)).toSeq
     assert(viaCompacted == viaBase,
       "probe over compacted index diverges from probe over base + tombstones")
   }
@@ -1866,7 +1865,7 @@ class LlmOpsSpec extends SparkTestBase {
     val sfx = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
     val liveCells = spark.read.parquet(graft.Util.scratch(s"i78_km_base_$sfx"))
       .select("cell").distinct().collect().map(_.getInt(0).toLong).toSet
-    val cbIds = spark.read.parquet(LlmOps.pqrCbDir(
+    val cbIds = spark.read.parquet(graft.ops.AnnIndex.cbDir(
         graft.Util.scratch(s"i78_rivfpq_base_$sfx")))
       .select("sub", "cid").distinct().collect()
       .map(r => (r.getInt(0), r.getInt(1))).toSet

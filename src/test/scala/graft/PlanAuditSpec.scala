@@ -94,7 +94,7 @@ class PlanAuditSpec extends SparkTestBase {
     import graft.ops.LlmOps
     val dir = LlmOps.sq8WriteIndexIvf(spark, sfDir)
     // the k×64 centroid table is an index-BUILD-time artifact (r9 #1)
-    val cent = spark.read.parquet(LlmOps.sq8IvfCentDir(dir))
+    val cent = spark.read.parquet(graft.ops.AnnIndex.centDir(dir))
     assert(cent.schema.fieldNames.sorted.toSeq == Seq("c", "cell", "pos"))
     val k = cent.select("cell").distinct().count()
     assert(cent.count() == k * 64, s"expected ${k}×64 centroid rows")
@@ -119,9 +119,9 @@ class PlanAuditSpec extends SparkTestBase {
     // the on-disk index is codes-only: 8 small ints per vector
     assert(codes.schema.fieldNames.sorted.toSeq ==
       Seq("codes", "label", "vec_id"))
-    val stage1 = LlmOps.pqCodesTop(codes,
-      LlmOps.pqAdcLit(spark, dir, LlmOps.pqQueryGrid(spark, sfDir, 7L)),
-      50, 7L)
+    val stage1 = LlmOps.codesTopK(codes,
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(dir), LlmOps.pqQueryGrid(spark, sfDir, 7L), LlmOps.PqK),
+      50, 7L, LlmOps.PqK)
     val plan = stage1.queryExecution.executedPlan.toString
     assert(plan.contains("i69_pq"),
       "stage 1 must scan the persisted PQ codes dir")
@@ -138,10 +138,10 @@ class PlanAuditSpec extends SparkTestBase {
     import graft.ops.LlmOps
     import org.apache.spark.sql.functions.col
     val dir = LlmOps.pqWriteIndex(spark, sfDir)
-    val stage1 = LlmOps.pqCodesTop(
+    val stage1 = LlmOps.codesTopK(
       spark.read.parquet(dir).filter(col("label") < 5),
-      LlmOps.pqAdcLit(spark, dir, LlmOps.pqQueryGrid(spark, sfDir, 7L)),
-      50, 7L)
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(dir), LlmOps.pqQueryGrid(spark, sfDir, 7L), LlmOps.PqK),
+      50, 7L, LlmOps.PqK)
     val plan = stage1.queryExecution.executedPlan.toString
     // the predicate must reach the parquet scan as a pushed filter —
     // the design decision (metadata rides the index row) made a plan
@@ -159,10 +159,10 @@ class PlanAuditSpec extends SparkTestBase {
     assert(out.length == 10 && out.forall(_.getInt(1) < 5))
     // a predicate that eliminates the whole pool degrades to zero
     // rows, not an error — the service returns "no eligible results"
-    val none = LlmOps.pqCodesTop(
+    val none = LlmOps.codesTopK(
       spark.read.parquet(dir).filter(col("label") < -1),
-      LlmOps.pqAdcLit(spark, dir, LlmOps.pqQueryGrid(spark, sfDir, 7L)),
-      50, 7L)
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(dir), LlmOps.pqQueryGrid(spark, sfDir, 7L), LlmOps.PqK),
+      50, 7L, LlmOps.PqK)
     assert(none.count() == 0)
   }
 
@@ -176,10 +176,10 @@ class PlanAuditSpec extends SparkTestBase {
     // artifacts must not share a name for different meanings
     assert(codes.schema.fieldNames.sorted.toSeq ==
       Seq("cell", "codes", "vec_id"))
-    val stage1 = LlmOps.pqCodesTop(
+    val stage1 = LlmOps.codesTopK(
       codes.filter(col("cell").isin(0, 1)),
-      LlmOps.pqAdcLit(spark, LlmOps.pqWriteIndex(spark, sfDir),
-        LlmOps.pqQueryGrid(spark, sfDir, 7L)), 50, 7L)
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(LlmOps.pqWriteIndex(spark, sfDir)),
+        LlmOps.pqQueryGrid(spark, sfDir, 7L), LlmOps.PqK), 50, 7L, LlmOps.PqK)
     val plan = stage1.queryExecution.executedPlan.toString
     assert(plan.contains("i71_ivfpq"),
       "stage 1 must scan the persisted IVF-PQ dir")
@@ -205,7 +205,7 @@ class PlanAuditSpec extends SparkTestBase {
     val qq = LlmOps.pqQueryGrid(spark, sfDir, 7L)
     val stage1 = LlmOps.codesTopK(
       codes.filter(col("cell").isin(0, 1)),
-      LlmOps.adcLitFrom(spark, LlmOps.pqrCbDir(dir), qq, LlmOps.PqrK),
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(dir), qq, LlmOps.PqrK),
       50, 7L, LlmOps.PqrK,
       cellTerm = element_at(
         typedLit(LlmOps.cellDotMap(spark, kmIdx, qq, Seq(0, 1))), col("cell")))
@@ -234,7 +234,7 @@ class PlanAuditSpec extends SparkTestBase {
     val stage1 = LlmOps.codesTopK(
       spark.read.parquet(dir)
         .filter(col("cell").isin(0, 1)).filter(col("label") < 5),
-      LlmOps.adcLitFrom(spark, LlmOps.pqrCbDir(dir), qq, LlmOps.PqrK),
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(dir), qq, LlmOps.PqrK),
       50, 7L, LlmOps.PqrK,
       cellTerm = element_at(
         typedLit(LlmOps.cellDotMap(spark, kmIdx, qq, Seq(0, 1))), col("cell")))
@@ -266,7 +266,7 @@ class PlanAuditSpec extends SparkTestBase {
     val stage1 = LlmOps.codesTopK(
       spark.read.parquet(dir).filter(col("cell").isin(0, 1))
         .join(broadcast(tomb), Seq("vec_id"), "left_anti"),
-      LlmOps.adcLitFrom(spark, LlmOps.pqrCbDir(dir), qq, LlmOps.PqrK),
+      LlmOps.adcLitFrom(spark, graft.ops.AnnIndex.cbDir(dir), qq, LlmOps.PqrK),
       50, 7L, LlmOps.PqrK,
       cellTerm = element_at(
         typedLit(LlmOps.cellDotMap(spark, kmIdx, qq, Seq(0, 1))), col("cell")))

@@ -31,6 +31,41 @@ class StreamOpsSpec extends SparkTestBase {
     assert(b.exceptAll(a).count() == 0)
   }
 
+  test("arrival sizing logs the unreadable path and its cause before falling back") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    // the session first: its startup (re)configures log4j and levels
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("arrival-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val logger = LogManager.getLogger("graft.ops.StreamOps").asInstanceOf[Logger]
+    val prevLevel = logger.getLevel
+    Configurator.setLevel("graft.ops.StreamOps", Level.WARN)
+    logger.addAppender(capture)
+    val inside = try StreamOps.withArrivalSizedShuffle(spark,
+        Seq("nosuchscheme://bucket/arrivals")) { spark.conf.get(key) }
+      finally {
+        logger.removeAppender(capture)
+        Configurator.setLevel("graft.ops.StreamOps", prevLevel)
+      }
+    // the fallback itself is unchanged: default parallelism, restored after
+    assert(inside == spark.sparkContext.defaultParallelism.toString)
+    assert(spark.conf.get(key) == before)
+    val warned = seen.toArray.map(_.toString).filter(_.startsWith("WARN"))
+    assert(warned.exists(_.contains("nosuchscheme://bucket/arrivals")),
+      s"no fallback warning naming the path: $seen")
+    assert(warned.exists(_.contains("UnsupportedFileSystemException")),
+      s"the warning does not name the exception: ${warned.mkString("; ")}")
+  }
+
   test("j1 tumbling aggregation: stream equals batch") {
     val batch = StreamOps.tumblingAgg(Tables.t(spark, sfDir, "events"))
     val stream = runToTable(StreamOps.tumblingAgg(
@@ -490,7 +525,8 @@ class StreamOpsSpec extends SparkTestBase {
       .filter(col("vec_id") % 101 === 3)
       .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
       .localCheckpoint()
-    val expect = StreamOps.ivfBatchStage1(spark, idx, qs)
+    val expect = graft.ops.AnnIndex.sq8Probe(spark.read.parquet(idx), qs,
+      Some(spark.read.parquet(graft.ops.AnnIndex.centDir(idx))))
       .join(e, "vec_id")
       .withColumn("sim", round(graft.functions.VectorFunctions.dot(
         col("embedding"), col("qvec")), 6))
@@ -519,7 +555,8 @@ class StreamOpsSpec extends SparkTestBase {
       .withColumn("maxq", LlmOps.sqMaxAbs).filter(col("maxq") > 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
       .localCheckpoint()
-    val expect = StreamOps.ivfBatchStage1(spark, idx, qs)
+    val expect = graft.ops.AnnIndex.sq8Probe(spark.read.parquet(idx), qs,
+      Some(spark.read.parquet(graft.ops.AnnIndex.centDir(idx))))
       .join(e, "vec_id")
       .withColumn("sim", round(graft.functions.VectorFunctions.dot(
         col("embedding"), col("qvec")), 6))
@@ -552,7 +589,8 @@ class StreamOpsSpec extends SparkTestBase {
       .collect().head
     val qb = Seq((qrow.getLong(0), qrow.getSeq[Float](1)))
       .toDF("q_id", "qvec")
-    val stage1 = StreamOps.ivfBatchStage1(spark, idx, qb)
+    val stage1 = graft.ops.AnnIndex.sq8Probe(spark.read.parquet(idx), qb,
+      Some(spark.read.parquet(graft.ops.AnnIndex.centDir(idx))))
     val plan = stage1.queryExecution.executedPlan.toString
     // `cell` is the family-wide partition column since r13 (the SQ8
     // artifacts joined the IVF-PQ/residual convention — r12 verdict #5)
@@ -573,13 +611,14 @@ class StreamOpsSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val e = Tables.t(spark, sfDir, "embeddings")
     val idx = LlmOps.pqIvfWriteIndex(spark, sfDir)
-    val cb = LlmOps.pqCbDir(LlmOps.pqWriteIndex(spark, sfDir))
-    val cent = LlmOps.sq8IvfCentDir(LlmOps.sq8WriteIndexKmeans(spark, sfDir))
+    val cb = graft.ops.AnnIndex.cbDir(LlmOps.pqWriteIndex(spark, sfDir))
+    val cent = graft.ops.AnnIndex.centDir(LlmOps.sq8WriteIndexKmeans(spark, sfDir))
     val qs = e.filter(col("vec_id") % 101 === 3)
       .withColumn("maxq", LlmOps.sqMaxAbs).filter(col("maxq") > 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
       .localCheckpoint()
-    val expect = StreamOps.pqIvfBatchStage1(spark, idx, cb, cent, qs)
+    val expect = graft.ops.AnnIndex.adcProbe(spark.read.parquet(idx),
+      spark.read.parquet(cb), qs, Some(spark.read.parquet(cent)))
       .join(e, "vec_id")
       .withColumn("sim", round(graft.functions.VectorFunctions.dot(
         col("embedding"), col("qvec")), 6))
@@ -598,12 +637,13 @@ class StreamOpsSpec extends SparkTestBase {
     // the 8-byte ADC is the sf0.1 oracle gate, where the cut bites and
     // 16/60 answers differ from j22's (plus the plan pin below: no
     // qarr/maxabs in the probed scan).
-    val qcells = StreamOps.ivfBatchCells(spark, cent, qs, 2)
+    val qcells = graft.ops.AnnIndex.queryCells(spark.read.parquet(cent), qs, 2)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     val cellOf = spark.read.parquet(idx)
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val s1 = StreamOps.pqIvfBatchStage1(spark, idx, cb, cent, qs)
+    val s1 = graft.ops.AnnIndex.adcProbe(spark.read.parquet(idx),
+      spark.read.parquet(cb), qs, Some(spark.read.parquet(cent)))
       .select("q_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(s1.nonEmpty && s1.forall { case (q, v) =>
@@ -615,14 +655,15 @@ class StreamOpsSpec extends SparkTestBase {
     import graft.ops.LlmOps
     import spark.implicits._
     val idx = LlmOps.pqIvfWriteIndex(spark, sfDir)
-    val cb = LlmOps.pqCbDir(LlmOps.pqWriteIndex(spark, sfDir))
-    val cent = LlmOps.sq8IvfCentDir(LlmOps.sq8WriteIndexKmeans(spark, sfDir))
+    val cb = graft.ops.AnnIndex.cbDir(LlmOps.pqWriteIndex(spark, sfDir))
+    val cent = graft.ops.AnnIndex.centDir(LlmOps.sq8WriteIndexKmeans(spark, sfDir))
     val qrow = Tables.t(spark, sfDir, "embeddings")
       .filter(col("vec_id") === 7).select("vec_id", "embedding")
       .collect().head
     val qb = Seq((qrow.getLong(0), qrow.getSeq[Float](1)))
       .toDF("q_id", "qvec")
-    val stage1 = StreamOps.pqIvfBatchStage1(spark, idx, cb, cent, qb)
+    val stage1 = graft.ops.AnnIndex.adcProbe(spark.read.parquet(idx),
+      spark.read.parquet(cb), qb, Some(spark.read.parquet(cent)))
     val plan = stage1.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && {
       val pf = plan.substring(plan.indexOf("PartitionFilters"))
@@ -642,13 +683,14 @@ class StreamOpsSpec extends SparkTestBase {
     import graft.ops.LlmOps
     import spark.implicits._
     val idx = LlmOps.pqIvfWriteIndex(spark, sfDir)
-    val cb = LlmOps.pqCbDir(LlmOps.pqWriteIndex(spark, sfDir))
-    val cent = LlmOps.sq8IvfCentDir(LlmOps.sq8WriteIndexKmeans(spark, sfDir))
+    val cb = graft.ops.AnnIndex.cbDir(LlmOps.pqWriteIndex(spark, sfDir))
+    val cent = graft.ops.AnnIndex.centDir(LlmOps.sq8WriteIndexKmeans(spark, sfDir))
     // a micro-batch whose queries were ALL guard-filtered upstream:
     // zero rows must yield zero survivors, not an empty-isin plan or
     // an exception from the bounded cell collect
     val empty = Seq.empty[(Long, Seq[Float])].toDF("q_id", "qvec")
-    val out = StreamOps.pqIvfBatchStage1(spark, idx, cb, cent, empty)
+    val out = graft.ops.AnnIndex.adcProbe(spark.read.parquet(idx),
+      spark.read.parquet(cb), empty, Some(spark.read.parquet(cent)))
     assert(out.columns.toSeq == Seq("q_id", "vec_id", "qvec"))
     assert(out.count() == 0)
   }
@@ -732,14 +774,16 @@ class StreamOpsSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val e = Tables.t(spark, sfDir, "embeddings")
     val idx = LlmOps.pqrWriteIndex(spark, sfDir)
-    val cent = LlmOps.sq8IvfCentDir(LlmOps.sq8WriteIndexKmeans(spark, sfDir))
+    val cent = graft.ops.AnnIndex.centDir(LlmOps.sq8WriteIndexKmeans(spark, sfDir))
     val qs = e.filter(col("vec_id") % 101 === 3)
       .withColumn("maxq", LlmOps.sqMaxAbs).filter(col("maxq") > 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
         expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))")
           .as("qq"))
       .localCheckpoint()
-    val stage1 = LlmOps.pqrBatchTop(spark, idx, cent, qs, 50)
+    val stage1 = graft.ops.AnnIndex.adcProbe(spark.read.parquet(idx),
+      spark.read.parquet(graft.ops.AnnIndex.cbDir(idx)), qs,
+      Some(spark.read.parquet(cent)), residual = true).select("q_id", "vec_id")
     val expect = stage1
       .join(e, "vec_id")
       .join(broadcast(qs.select("q_id", "qvec")), "q_id")
@@ -753,7 +797,7 @@ class StreamOpsSpec extends SparkTestBase {
     assert(expect.nonEmpty && fromStream.toSet == expect.toSet,
       s"residual stream serving diverges: ${fromStream.length} vs ${expect.length}")
     // per-query cell restriction (the j23 pin, on the residual artifact)
-    val qcells = StreamOps.ivfBatchCells(spark, cent, qs, 2)
+    val qcells = graft.ops.AnnIndex.queryCells(spark.read.parquet(cent), qs, 2)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     val cellOf = spark.read.parquet(idx)
       .select("vec_id", "cell").collect()
